@@ -1,6 +1,3 @@
-from os___mapreduceframework_spark.plans.audit import (
-    executed_plan,
-    phase_timings_listener,
-)
+from os___mapreduceframework_spark.plans.audit import executed_plan
 
-__all__ = ["executed_plan", "phase_timings_listener"]
+__all__ = ["executed_plan"]

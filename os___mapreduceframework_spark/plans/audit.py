@@ -1,19 +1,15 @@
-"""Physical-plan inspection + phase timing instrumentation.
+"""Physical-plan inspection.
 
-The reference logs per-phase wall times to ``.MapReduceFramework.log``
-(MapReduceFramework.cpp:388-392, :413-417 -- with a 10x unit bug at
-:21). Spark's equivalent observability is the executed plan and query
-execution metrics; this module exposes both: ``executed_plan`` for plan
-audits (pushdown/broadcast/codegen assertions in tests) and a
-``QueryExecutionListener`` that logs correct-unit phase timings.
+``executed_plan`` and the assertions built on it back the plan audits
+(pushdown/broadcast/codegen assertions in tests). The reference's
+per-phase wall-time log (MapReduceFramework.cpp:388-392, :413-417) has
+its counterpart outside the package: perfbench's traced run reads
+Spark's status stores and query-execution phases.
 """
 
 from __future__ import annotations
 
-import json
-import time
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def executed_plan(df: DataFrame, *, run: bool = False) -> str:
@@ -86,35 +82,3 @@ def _broadcast_offenders(plan: str, facts: tuple[str, ...]) -> list[str]:
             continue
         offenders.extend(f for f in facts if f in subtxt)
     return sorted(set(offenders))
-
-
-def phase_timings_listener(spark: SparkSession, log_path: str):
-    """Attach a QueryExecutionListener appending one JSON line per query
-    with wall time in seconds (correct units, unlike the reference's
-    SEC_TO_NANO=1e10 bug at MapReduceFramework.cpp:21).
-
-    Returns the listener so callers can detach with
-    ``spark.listenerManager.unregister(...)``. Py4J callback listeners
-    need the gateway's callback server; we fall back to a no-op shim if
-    it is unavailable (e.g. some embedded environments).
-    """
-    from pyspark.sql.utils import QueryExecutionListener
-
-    class _Timings(QueryExecutionListener):
-        def onSuccess(self, funcName, qe, durationNs):
-            rec = {
-                "ts": time.time(),
-                "func": funcName,
-                "duration_sec": durationNs / 1e9,
-            }
-            with open(log_path, "a") as f:
-                f.write(json.dumps(rec) + "\n")
-
-        def onFailure(self, funcName, qe, exception):
-            rec = {"ts": time.time(), "func": funcName, "error": str(exception)[:200]}
-            with open(log_path, "a") as f:
-                f.write(json.dumps(rec) + "\n")
-
-    listener = _Timings()
-    spark.listenerManager.register(listener)
-    return listener

@@ -44,7 +44,8 @@ def traced_run_to_completion(sdf, output_mode="complete", shuffle_partitions=8):
     t0 = time.perf_counter()
     try:
         if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+            n = min(shuffle_partitions, spark.sparkContext.defaultParallelism)
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
         q = (
             sdf.writeStream.outputMode(output_mode)
             .format("memory")
