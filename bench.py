@@ -178,6 +178,64 @@ def _noise_fields(
     }
 
 
+def _write_record(
+    timings: dict[str, float],
+    dispersion: dict[str, list[float]],
+    per_query_load: dict[str, float],
+    cal_timeline: list[dict],
+    *,
+    runs: int,
+    isolated: bool,
+    load_avg_1m: tuple[float, float],
+    calibration: tuple[float, float],
+) -> None:
+    """Write the samples sidecar and print the ONE stdout JSON line.
+
+    Per-query sample dispersion goes to the sidecar: keeping the final
+    stdout line compact (metric/value/queries only) lets the driver's
+    tail capture parse it -- BENCH_r02 recorded parsed:null because the
+    ~3.5 KB samples payload got truncated mid-object. ``load_avg_1m``
+    and ``calibration`` are the (start, end) readings of the run."""
+    sidecar = {"runs_per_query": runs, "stat": "min"}
+    if isolated:
+        sidecar["isolated"] = True
+    sidecar.update(
+        samples=dispersion,
+        per_query_load_1m=per_query_load,
+        cal_timeline=cal_timeline,
+        spread_flagged=_flagged(dispersion),
+    )
+    with open(".spark_graft_bench_samples.json", "w") as f:
+        json.dump(sidecar, f)
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    record = {
+        "metric": "headline_suite_wall_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # which fixture actually ran: auto-detect picks the largest sf*
+        # dir present, so cross-round comparability needs the choice
+        # recorded in the output (ADVICE r4)
+        "sf_dir": SF_DIR,
+        # shared-session is the BASELINE.md-comparable mode; isolated
+        # (fresh JVM per query) has different warmth economics, so a
+        # silent mode switch would shift every ratio (VERDICT r8 item 5)
+        "mode": "isolated" if isolated else "shared",
+    }
+    if not isolated:
+        record["runs_per_query"] = runs
+    # shared-box noise adjudication (VERDICT r6 item 5): the calibration
+    # loop is data-independent, so a headline delta that tracks
+    # calibration/load drift is the box, one that doesn't is a plan
+    # change; the interleaved timeline self-adjudicates in-run spikes
+    # (VERDICT r7 item 3)
+    record["load_avg_1m"] = {"start": load_avg_1m[0], "end": load_avg_1m[1]}
+    record["calibration_sec"] = {"start": calibration[0], "end": calibration[1]}
+    record["noise"] = _noise_fields(dispersion, cal_timeline)
+    print(json.dumps(record))
+
+
 def _run_one(name: str) -> None:
     """Time one query in THIS process (n_runs samples) and print a JSON
     line -- the child half of isolation mode."""
@@ -228,40 +286,12 @@ def _main_isolated() -> None:
                  "load_1m": per_query_load[name]}
             )
         print(f"# {name}: {timings[name]:.3f}s (isolated)", file=sys.stderr)
-    with open(".spark_graft_bench_samples.json", "w") as f:
-        json.dump(
-            {"runs_per_query": len(next(iter(dispersion.values()), [])),
-             "stat": "min", "isolated": True, "samples": dispersion,
-             "per_query_load_1m": per_query_load,
-             "cal_timeline": cal_timeline,
-             "spread_flagged": _flagged(dispersion)}, f
-        )
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    print(
-        json.dumps(
-            {
-                "metric": "headline_suite_wall_sec",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": timings,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                # which fixture actually ran: auto-detect picks the largest
-                # sf* dir present, so cross-round comparability needs the
-                # choice recorded in the output (ADVICE r4)
-                "sf_dir": SF_DIR,
-                # isolated (fresh JVM per query) has different warmth
-                # economics than shared-session; BASELINE.md was measured
-                # shared, so a silent mode switch would shift every ratio
-                # (VERDICT r8 item 5)
-                "mode": "isolated",
-                "load_avg_1m": {"start": load_start, "end": _load_avg_1m()},
-                "calibration_sec": {
-                    "start": calib_start,
-                    "end": _calibration_sec(cal_spark),
-                },
-                "noise": _noise_fields(dispersion, cal_timeline),
-            }
-        )
+    _write_record(
+        timings, dispersion, per_query_load, cal_timeline,
+        runs=len(next(iter(dispersion.values()), [])),
+        isolated=True,
+        load_avg_1m=(load_start, _load_avg_1m()),
+        calibration=(calib_start, _calibration_sec(cal_spark)),
     )
 
 
@@ -275,7 +305,6 @@ def main() -> None:
     region = spark.read.parquet(os.path.join(SF_DIR, "region.parquet"))
     materialize(region)
     materialize(region.mapInPandas(lambda it: it, schema=region.schema))
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     load_start, calib_start = _load_avg_1m(), _calibration_sec(spark)
     timings: dict[str, float] = {}
@@ -306,59 +335,13 @@ def main() -> None:
             else ""
         )
         print(f"# {name}: {timings[name]:.3f}s{spread}", file=sys.stderr)
-    total = round(sum(timings.values()), 3)
-    # F12 parity artifact: the reference logs per-phase wall times to
-    # .MapReduceFramework.log (MapReduceFramework.cpp:388-392, :413-417,
-    # with a 10x unit bug at :21); we log per-query seconds, correctly
-    with open(".spark_graft_phases.log", "a") as f:
-        for name, sec in timings.items():
-            f.write(json.dumps({"ts": time.time(), "query": name, "sec": sec}) + "\n")
-    # per-query sample dispersion goes to a sidecar file: keeping the
-    # final stdout line compact (metric/value/queries only) lets the
-    # driver's tail capture parse it -- BENCH_r02 recorded parsed:null
-    # because the ~3.5 KB samples payload got truncated mid-object
-    with open(".spark_graft_bench_samples.json", "w") as f:
-        json.dump(
-            {"runs_per_query": n_runs, "stat": "min", "samples": dispersion,
-             "per_query_load_1m": per_query_load,
-             "cal_timeline": cal_timeline,
-             "spread_flagged": _flagged(dispersion)}, f
-        )
-    print(
-        json.dumps(
-            {
-                "metric": "headline_suite_wall_sec",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                # which fixture actually ran: auto-detect picks the largest
-                # sf* dir present, so cross-round comparability needs the
-                # choice recorded in the output (ADVICE r4)
-                "sf_dir": SF_DIR,
-                # shared-session is the BASELINE.md-comparable mode; the
-                # isolated twin stamps "isolated" (VERDICT r8 item 5)
-                "mode": "shared",
-                # shared-box noise adjudication (VERDICT r6 item 5): the
-                # calibration loop is data-independent, so a headline
-                # delta that tracks calibration/load drift is the box,
-                # one that doesn't is a plan change
-                "runs_per_query": n_runs,
-                "load_avg_1m": {"start": load_start, "end": _load_avg_1m()},
-                "calibration_sec": {
-                    "start": calib_start,
-                    "end": _calibration_sec(spark),
-                },
-                # self-adjudication (VERDICT r7 item 3): interleaved
-                # calibration/load timeline + full noise context for any
-                # query whose samples spread >1.5x -- a spike whose
-                # neighbors' calibration also moved is box steal, one
-                # whose calibration stayed flat is a plan change
-                "noise": _noise_fields(dispersion, cal_timeline),
-            }
-        )
+    _write_record(
+        timings, dispersion, per_query_load, cal_timeline,
+        runs=n_runs,
+        isolated=False,
+        load_avg_1m=(load_start, _load_avg_1m()),
+        calibration=(calib_start, _calibration_sec(spark)),
     )
-
 
 if __name__ == "__main__":
     if len(sys.argv) > 2 and sys.argv[1] == "--one":

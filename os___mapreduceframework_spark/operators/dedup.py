@@ -394,8 +394,9 @@ def embedding_near_exact(emb: DataFrame, threshold: float) -> DataFrame:
 )
 def _embedding_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_a, vec_b, cos_sim) >= COSINE_NEAR_THRESHOLD, UNSORTED -- the
-    shared detect stage of dedup_embedding_near (which adds the output
-    orderBy) and dedup_embedding_clusters (whose CC consumes the edge
+    registered dedup_embedding_near query itself (no output orderBy: the
+    driver's compare is order-insensitive) and the shared detect stage
+    of dedup_embedding_clusters (whose CC consumes the edge
     set order-free; feeding it the sorted form paid a range-partition
     exchange + sort for rows the union/distinct immediately re-hashed).
     """
@@ -428,10 +429,6 @@ def _embedding_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_b").alias("vec_b"),
         F.col("cs").alias("cos_sim"),
     ).filter(F.col("cos_sim") >= COSINE_NEAR_THRESHOLD)
-
-
-def q_dedup_embedding_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _embedding_near_pairs(spark, sf_dir).orderBy("vec_a", "vec_b")
 
 
 # audit floor of the strict detector's output: scored candidates below

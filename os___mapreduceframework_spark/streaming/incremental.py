@@ -476,6 +476,17 @@ def incremental_span_dedup(
         _recover_span_registry(registry_dir)
         if os.path.isdir(registry_dir):
             prior = docs_stream.sparkSession.read.parquet(registry_dir)
+            # the window hash became a 16-byte binary digest in r10; a
+            # registry written before stores it as a string, and binary
+            # rows appended to it would never match its old hashes
+            h_type = next((f.dataType for f in prior.schema if f.name == "h"), None)
+            if not isinstance(h_type, T.BinaryType):
+                raise ValueError(
+                    f"span registry {registry_dir} stores window hashes as "
+                    f"{h_type.simpleString() if h_type else 'nothing'}, not the "
+                    "16-byte binary digest this version writes; resume from a "
+                    "registry written by this version or start fresh (fresh=True)"
+                )
             if "b" in prior.columns:
                 prev_max = prior.agg(F.max("b")).collect()[0][0]
                 batch_base = (prev_max if prev_max is not None else -1) + 1

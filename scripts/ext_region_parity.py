@@ -90,15 +90,16 @@ def main() -> int:
     assert emb_adaptive_bits(n) == 13 and emb_adaptive_bands(n) == 50
 
     # the preflight harness IS the driver-contract compare; reuse it
-    sys.argv = ["preflight_sweep.py", ",".join(QUERIES), dest]
-    import importlib
+    import __spark_entry__ as e
+    from preflight_sweep import run_cell, session, views
 
-    mod = importlib.import_module("preflight_sweep")
-    return mod.main()
+    spark = session("harness")
+    try:
+        bad = run_cell(spark, views(dest), dest, e.queries(), e.oracle_sql(), QUERIES)
+    finally:
+        spark.stop()
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.abspath(__file__)))
-    )
     raise SystemExit(main())

@@ -1,5 +1,6 @@
 """Shared test fixtures: one SparkSession per test run + an oracle-compare
-helper mirroring the driver's DuckDB check (SURVEY.md section 5.2)."""
+helper through the harness's own normalizer (scripts/preflight_sweep.py,
+the driver's value-hash contract; SURVEY.md section 5.2)."""
 
 from __future__ import annotations
 
@@ -7,13 +8,14 @@ import os
 import sys
 
 import duckdb
-import pandas as pd
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [REPO, os.path.join(REPO, "scripts")]
 
 from os___mapreduceframework_spark.session import get_session
 from os___mapreduceframework_spark.sources import TABLES
+from preflight_sweep import norm
 
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -33,36 +35,15 @@ def duck():
     con.close()
 
 
-def _canon(df: pd.DataFrame) -> list[tuple]:
-    """Canonical form: columns sorted by name, every value stringified,
-    rows sorted -- order-insensitive, like the driver's value hash."""
-    df = df[sorted(df.columns)]
-
-    def cell(v):
-        if hasattr(v, "tolist"):  # numpy array/scalar (duckdb .df() arrays)
-            v = v.tolist()
-        if isinstance(v, (list, tuple)):
-            return "[" + ",".join(cell(x) for x in v) + "]"
-        if pd.isna(v) if not isinstance(v, dict) else False:
-            return "NULL"
-        if isinstance(v, float):
-            return repr(round(v, 9))
-        if isinstance(v, bytes):
-            return v.hex()
-        return str(v)
-
-    rows = [tuple(cell(v) for v in row) for row in df.itertuples(index=False, name=None)]
-    return sorted(rows)
-
-
 def assert_matches_oracle(spark_df, duck_con, sql: str) -> None:
-    got = spark_df.toPandas()
-    want = duck_con.sql(sql).df()
-    assert sorted(got.columns) == sorted(want.columns), (
-        f"schema mismatch: spark={sorted(got.columns)} duckdb={sorted(want.columns)}"
+    want_rel = duck_con.sql(sql)
+    assert sorted(spark_df.columns) == sorted(want_rel.columns), (
+        f"schema mismatch: spark={sorted(spark_df.columns)} "
+        f"duckdb={sorted(want_rel.columns)}"
     )
+    got = norm(spark_df.columns, spark_df.collect())
+    want = norm(want_rel.columns, want_rel.fetchall())
     assert len(got) == len(want), f"row count mismatch: spark={len(got)} duckdb={len(want)}"
-    g, w = _canon(got), _canon(want)
-    if g != w:
-        diffs = [(a, b) for a, b in zip(g, w) if a != b][:5]
+    if got != want:
+        diffs = [(a, b) for a, b in zip(got, want) if a != b][:5]
         raise AssertionError(f"value mismatch, first diffs: {diffs}")

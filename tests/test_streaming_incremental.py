@@ -19,6 +19,7 @@ import shutil
 import tempfile
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from os___mapreduceframework_spark.streaming.incremental import incremental_dedup
@@ -468,6 +469,17 @@ def test_spans_resume_carries_compacted_memory_across_sessions(spark):
     # retain_batches horizon spans sessions monotonically.
     reg = spark.read.parquet(os.path.join(root, "state", "window_registry"))
     assert reg.agg({"b": "max"}).collect()[0][0] == 1
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def test_spans_resume_rejects_string_hash_registry(spark):
+    # a pre-r10 registry stores h as a string; resuming must refuse it
+    # by name instead of appending binary digests that never match
+    root = tempfile.mkdtemp(prefix="inc_spans_oldreg_")
+    reg = os.path.join(root, "state", "window_registry")
+    spark.createDataFrame([("a" * 32, 0)], "h string, b long").write.parquet(reg)
+    with pytest.raises(ValueError, match="window_registry.*string"):
+        _spans_session(spark, root, "s2", [(9, _T25)], fresh=False)
     shutil.rmtree(root, ignore_errors=True)
 
 
