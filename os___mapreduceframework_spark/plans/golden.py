@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from os___mapreduceframework_spark.plans.audit import executed_plan
 
 
-def normalized_plan(df: DataFrame) -> str:
+def normalized_plan(df: DataFrame, mask_computed_doubles: bool = False) -> str:
     plan = executed_plan(df)
     plan = re.sub(r"#\d+", "#", plan)
     # higher-order-function lambda variables carry a counter suffix
@@ -45,14 +45,17 @@ def normalized_plan(df: DataFrame) -> str:
     # partition count injected by the session's shuffle-partitions conf;
     # REPARTITION_BY_NUM counts (explicit repartition) stay as written
     plan = re.sub(r", \d+\), ENSURE_REQUIREMENTS", ", P), ENSURE_REQUIREMENTS", plan)
-    # computed scalar doubles baked into plans by driver-side
-    # recurrences (pagerank's dangling-mass constants): their exact
-    # values are FIXTURE STATISTICS, so a fixture regen with different
-    # row counts would spuriously fail every golden that carries them
-    # (VERDICT r9 item 7). >= 7 fractional digits separates computed
-    # doubles from written design constants (0.45, 1000.0), which stay.
-    plan = re.sub(r"\b\d+\.\d{7,}(?:E-?\d+)?\b", "<f>", plan)
-    # ...and the count-derived normalization factor multiplying such a
-    # recurrence ((base + slope * w) * N with N = a row count)
-    plan = re.sub(r"(\(<f> \+ \(<f> \* \w+#\)\) \* )\d+\.\d+\b", r"\1<f>", plan)
+    if mask_computed_doubles:
+        # computed scalar doubles baked into plans by driver-side
+        # recurrences (pagerank's dangling-mass constants): their exact
+        # values are FIXTURE STATISTICS, so a fixture regen with
+        # different row counts would spuriously fail the goldens that
+        # carry them (VERDICT r9 item 7). >= 7 fractional digits
+        # separates computed doubles from written design constants
+        # (0.45, 1000.0), which stay. Only those goldens ask for it:
+        # anywhere else a changed constant is a real regression.
+        plan = re.sub(r"\b\d+\.\d{7,}(?:E-?\d+)?\b", "<f>", plan)
+        # ...and the count-derived normalization factor multiplying such
+        # a recurrence ((base + slope * w) * N with N = a row count)
+        plan = re.sub(r"(\(<f> \+ \(<f> \* \w+#\)\) \* )\d+\.\d+\b", r"\1<f>", plan)
     return plan.rstrip() + "\n"

@@ -42,7 +42,7 @@ from os___mapreduceframework_spark.operators.minhash import (
 )
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.scratch import scratch_dir
-from os___mapreduceframework_spark.streaming.windows import run_to_completion
+from os___mapreduceframework_spark.streaming.windows import drain, run_to_completion
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -277,16 +277,7 @@ def incremental_minhash_dedup(
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_state(spark, state_dir)
 
-    import tempfile
-
-    ckpt = tempfile.mkdtemp(prefix="inc_mh_ckpt_")
-    q = (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    drain(docs_stream, lambda w: w.foreachBatch(process_batch))
     spark = docs_stream.sparkSession
     try:
         return spark.read.parquet(out_dir)
@@ -462,7 +453,6 @@ def incremental_span_dedup(
     drains.
     """
     import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
@@ -541,14 +531,7 @@ def incremental_span_dedup(
         if on_batch is not None:
             on_batch(batch_id)
 
-    ckpt = tempfile.mkdtemp(prefix="inc_spans_ckpt_")
-    q = (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    drain(docs_stream, lambda w: w.foreachBatch(process_batch))
     spark = docs_stream.sparkSession
     try:
         return spark.read.parquet(out_dir)

@@ -25,17 +25,14 @@ complete/update mode; the plan in the middle is unchanged.
 
 from __future__ import annotations
 
-import itertools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from os___mapreduceframework_spark.operators.search import search_count
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.sources.dir_source import DirEntriesDataSource
-
-_LIVE_COUNTER = itertools.count()
+from os___mapreduceframework_spark.streaming.windows import _SINK_COUNTER, drain
 
 
 def live_search_frame(spark: SparkSession, dirs: list[str], word: str) -> DataFrame:
@@ -52,44 +49,23 @@ def live_search_frame(spark: SparkSession, dirs: list[str], word: str) -> DataFr
     return search_count(entries, word)
 
 
-def start_live_search(
-    spark: SparkSession,
-    dirs: list[str],
-    word: str,
-    checkpoint: str,
-    *,
-    available_now: bool = True,
-):
-    """Start the live pipeline into a named memory sink (complete mode:
-    the sink table always holds the full current aggregation). Returns
-    ``(streaming_query, sink_table_name)``. With the same ``checkpoint``
-    across restarts the aggregation resumes from its state store --
-    entries already counted are never recounted."""
-    name = f"live_search_{next(_LIVE_COUNTER)}"
-    writer = (
-        live_search_frame(spark, dirs, word)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start(), name
-
-
 def drain_live_search(
-    spark: SparkSession, dirs: list[str], word: str, checkpoint: str
+    spark: SparkSession, dirs: list[str], word: str, checkpoint: str | None = None
 ) -> DataFrame:
     """Drain everything currently visible in ``dirs`` through the live
-    pipeline and return the materialized (name, cnt) snapshot. Calling
-    again with the same checkpoint after new files appear returns the
-    UPDATED cumulative aggregation (state-store resume), which is the
-    live-pipeline contract tests pin."""
-    q, name = start_live_search(spark, dirs, word, checkpoint)
-    q.awaitTermination()
+    pipeline into a memory sink (complete mode: the table holds the
+    full current aggregation) and return the (name, cnt) snapshot.
+    Calling again with the same ``checkpoint`` after new files appear
+    returns the UPDATED cumulative aggregation (state-store resume --
+    entries already counted are never recounted), which is the
+    live-pipeline contract tests pin. Without a checkpoint the run is
+    one-shot."""
+    name = f"live_search_{next(_SINK_COUNTER)}"
+    drain(
+        live_search_frame(spark, dirs, word),
+        lambda w: w.outputMode("complete").format("memory").queryName(name),
+        checkpoint=checkpoint,
+    )
     return spark.table(name)
 
 
@@ -117,6 +93,5 @@ _FIXTURE_TABLES = sorted(
     "tests/test_streaming_incremental.py.",
 )
 def q_stream_live_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ckpt = tempfile.mkdtemp(prefix="live_search_ckpt_")
-    out = drain_live_search(spark, [os.path.normpath(sf_dir)], "parquet", ckpt)
+    out = drain_live_search(spark, [os.path.normpath(sf_dir)], "parquet")
     return out.orderBy("name")

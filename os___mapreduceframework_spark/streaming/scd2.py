@@ -29,16 +29,14 @@ a multi-batch replay in tests/test_streaming_scd2.py.
 
 from __future__ import annotations
 
-import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.scratch import scratch_dir
 from os___mapreduceframework_spark.sinks import MergeTable
-from os___mapreduceframework_spark.streaming.windows import events_stream
+from os___mapreduceframework_spark.streaming.windows import drain, events_stream
 
 _HISTORY_SCHEMA = (
     "user_id long, state string, valid_from timestamp, "
@@ -119,14 +117,7 @@ def incremental_scd2(
             return
         table.merge(batch, merge_fn=_scd2_merge)
 
-    ckpt = tempfile.mkdtemp(prefix="scd2_ckpt_")
-    q = (
-        ev_stream.writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev_stream, lambda w: w.foreachBatch(process_batch))
     try:
         return table.read()
     except Exception:  # empty stream

@@ -28,6 +28,7 @@ from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.scratch import scratch_dir
 from os___mapreduceframework_spark.sinks.snapshot_table import SnapshotMergeTable
 from os___mapreduceframework_spark.sources import load_table, valid_event_times
+from os___mapreduceframework_spark.streaming.windows import drain
 
 N_SOURCE_FILES = 4  # micro-batches driven per run (maxFilesPerTrigger=1)
 
@@ -100,16 +101,7 @@ def q_stream_snapshot_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             table.merge(latest, merge_fn=_keep_newest)
 
-    import tempfile
-
-    ckpt = tempfile.mkdtemp(prefix="snapshot_cdc_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, lambda w: w.foreachBatch(process_batch))
 
     if table.current_version() is None:
         # zero input batches (empty source): the latest-state table is

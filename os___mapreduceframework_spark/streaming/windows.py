@@ -21,8 +21,12 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
+import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.scratch import scratch_dir
@@ -34,13 +38,16 @@ from os___mapreduceframework_spark.sources.registry import (
 
 _SINK_COUNTER = itertools.count()
 
-# Final progress of the most recent run_to_completion stream (the entry
-# with stateOperators populated). Streaming physical plans cannot be
+# The most recent drain(): every batch's progress (durationMs,
+# stateOperators, eventTime, observedMetrics) plus the wall seconds of
+# start() and awaitTermination(). Streaming physical plans cannot be
 # golden-snapshotted (micro-batch plans embed checkpoint-specific
 # state-store paths), so tests pin the execution SHAPE from here
-# instead: state operator names/count and watermark presence
-# (tests/test_stream_plan_goldens.py, VERDICT r5 item 4).
-LAST_PROGRESS: dict | None = None
+# instead (tests/test_stream_plan_goldens.py), and
+# scripts/stream_cost_breakdown.py splits stream cost from it.
+LAST_RUN: dict | None = None
+
+_PROGRESS_KEY = "spark.sql.streaming.numRecentProgressUpdates"
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,6 +76,59 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return valid_event_times(normalize_events(raw))
 
 
+def drain(
+    sdf: DataFrame,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    *,
+    shuffle_partitions: int | None = None,
+    checkpoint: str | None = None,
+) -> list[dict]:
+    """Run a streaming frame until its source is exhausted
+    (``availableNow``) and return every batch's progress.
+
+    ``sink`` only picks the sink on the writer (a memory table, a
+    ``foreachBatch`` function or ``noop``); everything else is owned
+    here. Without a ``checkpoint`` the run gets a fresh one under the
+    scratch root, deleted when the stream ends -- pass one only to
+    resume a stream from its state. ``shuffle_partitions`` caps the
+    state-store partition count for this run, held to the session's
+    default parallelism so the state tasks run in one wave; ``None``
+    keeps the session's count. The progress ring buffer is raised for
+    the run so no batch is dropped from ``recentProgress``; both
+    settings are restored afterwards. The progress and the start/await
+    wall seconds are also kept in ``LAST_RUN``.
+    """
+    global LAST_RUN
+    spark = sdf.sparkSession
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    old_cap = spark.conf.get(_PROGRESS_KEY)
+    ckpt = checkpoint
+    if ckpt is None:
+        ckpt = scratch_dir(f"stream_ckpt_{next(_SINK_COUNTER)}")
+    q = None
+    try:
+        if shuffle_partitions is not None:
+            n = min(shuffle_partitions, spark.sparkContext.defaultParallelism)
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        spark.conf.set(_PROGRESS_KEY, str(2**31 - 1))
+        writer = sink(sdf.writeStream).option("checkpointLocation", ckpt)
+        t0 = time.perf_counter()
+        q = writer.trigger(availableNow=True).start()
+        t1 = time.perf_counter()
+        q.awaitTermination()
+        t2 = time.perf_counter()
+        progress = list(q.recentProgress or [])
+    finally:
+        if q is not None and q.isActive:
+            q.stop()
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        spark.conf.set(_PROGRESS_KEY, old_cap)
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    LAST_RUN = {"progress": progress, "start_s": t1 - t0, "await_s": t2 - t1}
+    return progress
+
+
 def run_to_completion(
     sdf: DataFrame,
     output_mode: str = "complete",
@@ -77,40 +137,24 @@ def run_to_completion(
     """Drive a streaming frame through a memory sink until the source is
     exhausted; return the materialized result as a static DataFrame.
 
-    ``shuffle_partitions`` caps the state-store partition count for THIS
-    query (fresh checkpoint every call, so the setting is free to vary);
-    the count is also held to the session's default parallelism, so the
-    state tasks run in one wave. Windowed aggregations carry tiny bounded
-    state (windows x types) and pay ~1 s/query of per-partition
-    state-store setup at 32 partitions -- 8 halves the wall time
-    (measured 2.2 s -> 1.2 s at sf0.1), and on 4 cores 4 partitions beat
-    8 again (stream_stateful_user_stats 2.00 s -> 1.68 s at sf0.1).
+    ``shuffle_partitions`` defaults to 8 state partitions (see
+    ``drain``). Windowed aggregations carry tiny bounded state
+    (windows x types) and pay ~1 s/query of per-partition state-store
+    setup at 32 partitions -- 8 halves the wall time (measured 2.2 s ->
+    1.2 s at sf0.1), and on 4 cores 4 partitions beat 8 again
+    (stream_stateful_user_stats 2.00 s -> 1.68 s at sf0.1).
     Compute-heavy streams (incremental minhash) pass None to keep the
     session's full parallelism. On a real cluster this knob is the
     state-rebalance tradeoff: partitions are fixed per checkpoint, so
     production streams size it to peak key cardinality, not setup cost.
     """
-    spark = sdf.sparkSession
     name = f"stream_sink_{next(_SINK_COUNTER)}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if shuffle_partitions is not None:
-            n = min(shuffle_partitions, spark.sparkContext.defaultParallelism)
-            spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        q = (
-            sdf.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        global LAST_PROGRESS
-        progs = [p for p in (q.recentProgress or []) if p.get("stateOperators")]
-        LAST_PROGRESS = progs[-1] if progs else q.lastProgress
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(name)
+    drain(
+        sdf,
+        lambda w: w.outputMode(output_mode).format("memory").queryName(name),
+        shuffle_partitions=shuffle_partitions,
+    )
+    return sdf.sparkSession.table(name)
 
 
 @query(
@@ -338,9 +382,6 @@ def q_stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wrote, so the oracle verifies the whole write path.",
 )
 def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     out_dir = scratch_dir("foreach_batch_sink")
     shutil.rmtree(out_dir, ignore_errors=True)
 
@@ -349,16 +390,7 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    # fresh checkpoint per invocation: a reused checkpoint pins the old
-    # source path and fails with 'Wrong basePath' on a different sf_dir
-    ckpt = tempfile.mkdtemp(prefix="fbs_ckpt_", dir=tempfile.gettempdir())
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
+    drain(ev, lambda w: w.foreachBatch(write_batch))
     return (
         spark.read.parquet(out_dir)
         .groupBy("event_type")
@@ -649,24 +681,9 @@ def q_stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("n_nonfinite_value"),
     )
-    # recentProgress is a ring buffer (numRecentProgressUpdates,
-    # default 100): a multi-file source split into >100 micro-batches
-    # would silently drop the oldest batches' counters -- raise the cap
-    # for this run so the sum really covers EVERY batch
-    conf_key = "spark.sql.streaming.numRecentProgressUpdates"
-    old_cap = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "100000")
-    try:
-        q = (
-            observed.writeStream.format("noop")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        progresses = list(q.recentProgress or [])
-    finally:
-        spark.conf.set(conf_key, old_cap)
+    # drain keeps EVERY batch's progress (the recentProgress ring
+    # buffer is raised for the run), so the sum covers every batch
+    progresses = drain(observed, lambda w: w.format("noop").outputMode("append"))
     totals = {"n_rows": 0, "n_purchases": 0, "n_nonfinite_value": 0}
     for p in progresses:
         om = (p.get("observedMetrics") or {}).get("ingest_quality")

@@ -47,7 +47,9 @@ from os___mapreduceframework_spark.streaming.incremental import (
     incremental_dedup,
     incremental_span_dedup,
 )
+from os___mapreduceframework_spark.streaming import windows
 from os___mapreduceframework_spark.streaming.windows import (
+    drain,
     normalize_events,
     valid_event_times,
 )
@@ -75,9 +77,9 @@ def split_table(src_dir: str, table: str, dest: str, n_files: int) -> int:
     return t.num_rows
 
 
-def progress_rows(q) -> list[dict]:
+def progress_rows(progress: list[dict]) -> list[dict]:
     out = []
-    for p in q.recentProgress or []:
+    for p in progress:
         ops = p.get("stateOperators") or []
         out.append(
             {
@@ -94,17 +96,10 @@ def progress_rows(q) -> list[dict]:
     return out
 
 
-def drive(sdf, mode: str, ckpt: str) -> tuple[list[dict], float]:
-    t0 = time.perf_counter()
-    q = (
-        sdf.writeStream.outputMode(mode)
-        .format("noop")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    return progress_rows(q), round(time.perf_counter() - t0, 2)
+def drive(sdf, mode: str) -> tuple[list[dict], float]:
+    progress = drain(sdf, lambda w: w.outputMode(mode).format("noop"))
+    run = windows.LAST_RUN
+    return progress_rows(progress), round(run["start_s"] + run["await_s"], 2)
 
 
 def main() -> int:
@@ -149,11 +144,7 @@ def main() -> int:
             .parquet(docs_dir)
             .select("doc_id", F.md5("text").alias("fp"))
         )
-        batches, wall = drive(
-            incremental_dedup(docs),
-            "update",
-            os.path.join(WORK, label, "ckpt_dedup"),
-        )
+        batches, wall = drive(incremental_dedup(docs), "update")
         entry["stream_incremental_dedup"] = {"wall_s": wall, "batches": batches}
 
         # 2. tumbling event-time windows with watermark
@@ -176,9 +167,7 @@ def main() -> int:
                 .alias("sum_value"),
             )
         )
-        batches, wall = drive(
-            agg, "update", os.path.join(WORK, label, "ckpt_tumbling")
-        )
+        batches, wall = drive(agg, "update")
         entry["stream_tumbling_agg"] = {"wall_s": wall, "batches": batches}
 
         # 3. incremental span dedup (foreachBatch + parquet registry):

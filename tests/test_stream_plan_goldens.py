@@ -30,8 +30,9 @@ EXPECTED = {
 def test_stream_state_shape_matches_golden(spark, name):
     ops, wm = EXPECTED[name]
     registry.queries()[name](spark, TEST_SF_DIR)  # runs the stream
-    p = windows.LAST_PROGRESS
-    assert p is not None, "run_to_completion recorded no progress"
+    progs = [p for p in windows.LAST_RUN["progress"] if p.get("stateOperators")]
+    assert progs, "the stream recorded no state-operator progress"
+    p = progs[-1]
     got = [so.get("operatorName") for so in p.get("stateOperators", [])]
     assert got == ops, f"{name}: state operators {got}, expected {ops}"
     for so in p.get("stateOperators", []):
