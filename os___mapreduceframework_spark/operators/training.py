@@ -235,22 +235,24 @@ def q_vocab_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderkey
     """,
     doc="MERGE-capable sink end-to-end: build a bucket-partitioned "
-    "MergeTable from an orders slice, MERGE an update batch containing "
-    "both matched keys (updated in place) and unmatched keys "
+    "SnapshotMergeTable from an orders slice, MERGE an update batch "
+    "containing both matched keys (updated) and unmatched keys "
     "(inserted), read the table back. Only buckets holding update keys "
-    "are rewritten (sinks.merge_table; bucket-scoped copy-on-write is "
-    "pinned in tests/test_merge_table.py). Oracle is the equivalent "
-    "anti-join + union.",
+    "are rewritten, into the next snapshot's version dir (bucket-scoped "
+    "copy-on-write is pinned in tests/test_snapshot_table.py). Oracle "
+    "is the equivalent anti-join + union.",
 )
 def q_merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from os___mapreduceframework_spark.sinks import MergeTable
+    import shutil
+
+    from os___mapreduceframework_spark.sinks import SnapshotMergeTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    table = MergeTable(
-        spark, _scratch("merge_upsert_orders"), keys=["o_orderkey"], n_buckets=16
-    )
+    path = _scratch("merge_upsert_orders")
+    shutil.rmtree(path, ignore_errors=True)  # idempotent per invocation
+    table = SnapshotMergeTable(spark, path, keys=["o_orderkey"], n_buckets=16)
     table.overwrite(orders.filter(F.col("o_orderkey") % 4 != 3))
     updates = orders.filter((F.col("o_orderkey") % 8).isin(6, 7)).select(
         "o_orderkey", (F.col("o_totalprice") * 2).alias("o_totalprice")

@@ -1,4 +1,3 @@
-from os___mapreduceframework_spark.sinks.merge_table import MergeTable
 from os___mapreduceframework_spark.sinks.snapshot_table import SnapshotMergeTable
 
-__all__ = ["MergeTable", "SnapshotMergeTable"]
+__all__ = ["SnapshotMergeTable"]

@@ -1,9 +1,9 @@
-"""Snapshot-versioned MERGE table: time travel without lakehouse jars.
+"""Snapshot-versioned MERGE table: the package's one MERGE sink.
 
-``sinks.MergeTable`` rewrites affected buckets IN PLACE -- correct and
-bucket-pruned, but history is gone after every merge. This sibling adds
-the other half of what a table format provides: **immutable snapshots
-with time travel**, built the way Iceberg/Delta do it under the hood --
+The container ships no Delta/Iceberg jars, so ``MERGE INTO`` is not
+available as a table-format primitive. This table provides the same
+contract the way those formats do under the hood -- bucket-scoped
+copy-on-write plus **immutable snapshots with time travel**:
 append-only data files + a manifest per version that says which files
 are live:
 
@@ -16,8 +16,7 @@ are live:
 - ``_current`` names the latest version; commit order is
   files -> manifest -> pointer, so a crash mid-merge leaves the old
   version intact and the half-written files invisible (the atomicity a
-  format's log commit provides; single-writer assumed, as documented
-  for MergeTable);
+  format's log commit provides);
 - ``read(version=...)`` reconstructs ANY retained snapshot: group the
   manifest's buckets by version dir, read each dir partition-pruned to
   its live buckets, union -- cost proportional to live data, not
@@ -38,7 +37,7 @@ the current-version read does.
 
 The reference has no table surface at all (its output is an in-memory
 vector, MapReduceFramework.cpp:336-347); this is charter scope
-(training-pipeline sinks), same family as sinks/merge_table.py.
+(training-pipeline sinks).
 """
 
 from __future__ import annotations
@@ -49,8 +48,9 @@ import shutil
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from os___mapreduceframework_spark.sinks.merge_table import DEFAULT_N_BUCKETS
+DEFAULT_N_BUCKETS = 64
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -97,37 +97,39 @@ class SnapshotMergeTable:
         dropped) as snapshot metadata -- what a format keeps in its
         snapshot log. Required to read a version whose live-bucket set
         is empty (an empty overwrite, or merges that emptied every
-        bucket): with zero data files parquet inference has nothing to
-        work from. Written before the manifest commit; an orphan from a
-        failed commit is harmless."""
+        bucket), and it is the read schema of ``data/v{version}``. Written
+        before the manifest commit, so every committed version has one
+        (vacuum and recovery never delete it); an orphan from a failed
+        commit is harmless. The field list comes from the already
+        analysed ``bucketed`` schema, so no plan is analysed again."""
         os.makedirs(self._schema_dir(), exist_ok=True)
         spath = os.path.join(self._schema_dir(), f"v{version}.json")
         tmp = spath + ".tmp"
+        logical = StructType(
+            [f for f in bucketed.schema.fields if f.name != "__bucket"]
+        )
         with open(tmp, "w") as f:
-            json.dump(bucketed.drop("__bucket").schema.jsonValue(), f)
+            json.dump(logical.jsonValue(), f)
         os.replace(tmp, spath)
 
-    def _load_schema(self, version: int | None = None):
-        """The stored logical schema nearest AT-OR-BEFORE ``version``
-        (schema evolution is additive per snapshot), or the newest one
-        when no version is given; None for pre-metadata tables."""
-        from pyspark.sql.types import StructType
-
-        try:
-            names = os.listdir(self._schema_dir())
-        except OSError:
-            return None
-        vs = sorted(
-            int(n[1:-5])
-            for n in names
-            if n.startswith("v") and n.endswith(".json")
-        )
-        if version is not None:
-            vs = [v for v in vs if v <= version]
-        if not vs:
-            return None
-        with open(os.path.join(self._schema_dir(), f"v{vs[-1]}.json")) as f:
+    def _load_schema(self, version: int) -> StructType:
+        """The logical schema version ``version`` committed."""
+        with open(os.path.join(self._schema_dir(), f"v{version}.json")) as f:
             return StructType.fromJson(json.load(f))
+
+    def _write_version(self, version: int, bucketed: DataFrame) -> set[int]:
+        """Write ``bucketed`` as ``data/v{version}`` plus its schema and
+        return the buckets it holds, read from the ``__bucket=N`` dirs
+        the write created (a partitioned write makes a dir only for a
+        bucket that has rows), which costs no Spark job."""
+        root = self._data_dir(version)
+        bucketed.write.mode("overwrite").partitionBy("__bucket").parquet(root)
+        self._write_schema(version, bucketed)
+        return {
+            int(n.split("=", 1)[1])
+            for n in os.listdir(root)
+            if n.startswith("__bucket=")
+        }
 
     def _current_file(self) -> str:
         return os.path.join(self.path, "_current")
@@ -216,21 +218,7 @@ class SnapshotMergeTable:
     def overwrite(self, df: DataFrame) -> None:
         """Create snapshot v0 (or a fresh full snapshot) from ``df``."""
         version = 0 if self.current_version() is None else self.current_version() + 1
-        # checkpoint once: the write and the present-bucket collect must
-        # see the same rows (and an EMPTY frame leaves a dir with zero
-        # bucket files, which a read-back could not even infer a schema
-        # from -- the materialized frame is the authoritative content)
-        bucketed = self._bucket(df).localCheckpoint(eager=True)
-        (
-            bucketed.write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(self._data_dir(version))
-        )
-        present = {
-            r["__bucket"]
-            for r in bucketed.select("__bucket").distinct().collect()
-        }
-        self._write_schema(version, bucketed)
+        present = self._write_version(version, self._bucket(df))
         self._commit(version, {str(b): version for b in present})
 
     def merge(
@@ -272,9 +260,11 @@ class SnapshotMergeTable:
                 "it with overwrite() before staging a merge"
             )
         manifest = self._load_manifest(cur)
-        # materialize the bucketed updates once (same reasoning as
-        # MergeTable.merge): affected-set and written rows must agree
-        # even for non-deterministic update frames
+        # materialize the bucketed updates once: the affected-bucket
+        # collect and the merge must see the SAME rows, or a
+        # non-deterministic updates frame (rand keys, a directory that
+        # gains files between actions) writes a bucket the manifest
+        # never moves to the new version
         bucketed_updates = self._bucket(updates).localCheckpoint(eager=True)
         affected = [
             r["__bucket"]
@@ -285,16 +275,7 @@ class SnapshotMergeTable:
             merge_fn = self._upsert
         merged = merge_fn(existing, bucketed_updates.drop("__bucket"))
         version = cur + 1
-        bucketed = self._bucket(merged).localCheckpoint(eager=True)
-        (
-            bucketed.write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(self._data_dir(version))
-        )
-        survivors = {
-            r["__bucket"] for r in bucketed.select("__bucket").distinct().collect()
-        }
-        self._write_schema(version, bucketed)
+        survivors = self._write_version(version, self._bucket(merged))
         new_manifest = dict(manifest)
         for b in affected:
             if b in survivors:
@@ -313,22 +294,23 @@ class SnapshotMergeTable:
         )
 
     def _read_buckets(
-        self,
-        manifest: dict[str, int],
-        buckets: list[int],
-        version: int | None = None,
+        self, manifest: dict[str, int], buckets: list[int], version: int
     ) -> DataFrame:
         """Read the given buckets at the manifest's version pointers,
-        partition-pruned per version dir. Version dirs written before a
-        schema evolution lack the newer columns; unionByName null-pads
-        them (read-time schema merge)."""
+        partition-pruned per version dir. Each dir is read with the
+        schema its version stored (no parquet footer inference); dirs
+        written before a schema evolution lack the newer columns, and
+        unionByName null-pads them (read-time schema merge)."""
         by_version: dict[int, list[int]] = {}
         for b in buckets:
             v = manifest.get(str(b))
             if v is not None:
                 by_version.setdefault(v, []).append(b)
         parts = [
-            self.spark.read.parquet(self._data_dir(v))
+            self.spark.read.schema(
+                self._load_schema(v).add(StructField("__bucket", IntegerType()))
+            )
+            .parquet(self._data_dir(v))
             .filter(F.col("__bucket").isin(bs))
             .drop("__bucket")
             for v, bs in by_version.items()
@@ -337,27 +319,7 @@ class SnapshotMergeTable:
             # schema-only read for an empty selection: the snapshot
             # metadata is authoritative (and the ONLY source when the
             # table is empty -- zero data files anywhere)
-            schema = self._load_schema(version)
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
-            # pre-metadata tables: data/v0 may have been vacuumed away,
-            # so derive the schema from a dir some RETAINED manifest
-            # still references (this manifest's pointers first, then any
-            # retained version's)
-            fallback = next(iter(set(manifest.values())), None)
-            if fallback is None:
-                for v in reversed(self.versions()):
-                    m2 = self._load_manifest(v)
-                    if m2:
-                        fallback = next(iter(m2.values()))
-                        break
-            if fallback is None:
-                raise ValueError(
-                    f"SnapshotMergeTable at {self.path} has no data files "
-                    "to derive a schema from"
-                )
-            empty = self.spark.read.parquet(self._data_dir(fallback)).drop("__bucket")
-            return empty.limit(0)
+            return self.spark.createDataFrame([], self._load_schema(version))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)

@@ -16,15 +16,18 @@ splices into its user's timeline because the user's whole (small)
 history is re-windowed, while the table-wide cost stays proportional to
 the batch's users, not the table.
 
-The history lives in a user-bucketed ``MergeTable``
-(sinks.merge_table): each micro-batch's foreachBatch body is a true
-MERGE that reads and rewrites ONLY the buckets holding the batch's
-users -- copy-on-write scoped to affected partitions, the same
-mechanics a Delta/Iceberg MERGE has (no lakehouse jars ship in this
-container; swapping the sink for one is a substitution, not a
-redesign). The batch equivalence -- streamed result == one-shot batch
-rebuild -- is the registered query's oracle and is also pinned across
-a multi-batch replay in tests/test_streaming_scd2.py.
+The history lives in a user-bucketed ``SnapshotMergeTable``
+(sinks.snapshot_table): each micro-batch's foreachBatch body is a true
+MERGE that reads ONLY the buckets holding the batch's users and writes
+their new files into the next snapshot -- copy-on-write scoped to
+affected partitions, the same mechanics a Delta/Iceberg MERGE has (no
+lakehouse jars ship in this container; swapping the sink for one is a
+substitution, not a redesign). After each merge the table is vacuumed
+to its one current snapshot, so the files on disk stay the size of the
+live history however many batches run. The batch equivalence --
+streamed result == one-shot batch rebuild -- is the registered query's
+oracle and is also pinned across a multi-batch replay in
+tests/test_streaming_scd2.py.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.scratch import scratch_dir
-from os___mapreduceframework_spark.sinks import MergeTable
+from os___mapreduceframework_spark.sinks import SnapshotMergeTable
 from os___mapreduceframework_spark.streaming.windows import drain, events_stream
 
 _HISTORY_SCHEMA = (
@@ -100,28 +103,30 @@ def incremental_scd2(
     ev_stream: DataFrame, history_dir: str, n_buckets: int = 16
 ) -> DataFrame:
     """Drive the stream to completion, maintaining the SCD2 history as a
-    user-bucketed MergeTable at ``history_dir``; returns the final
-    history frame. Each micro-batch's MERGE reads and rewrites only the
-    buckets holding affected users -- table-wide cost never enters the
-    loop (tests pin untouched buckets' files byte-identical)."""
+    user-bucketed SnapshotMergeTable at ``history_dir``; returns the
+    final history frame. Each micro-batch's MERGE reads and rewrites
+    only the buckets holding affected users -- table-wide cost never
+    enters the loop -- and keeps one snapshot."""
     spark = ev_stream.sparkSession
     shutil.rmtree(history_dir, ignore_errors=True)
-    table = MergeTable(spark, history_dir, keys=["user_id"], n_buckets=n_buckets)
+    table = SnapshotMergeTable(
+        spark, history_dir, keys=["user_id"], n_buckets=n_buckets
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
         batch = batch_df.select("user_id", "event_type", "ts", "event_id")
-        if not table.exists():
+        if table.current_version() is None:
             table.overwrite(_rewindow(_dedup_events(batch)))
             return
         table.merge(batch, merge_fn=_scd2_merge)
+        table.vacuum(keep_last=1)
 
     drain(ev_stream, lambda w: w.foreachBatch(process_batch))
-    try:
-        return table.read()
-    except Exception:  # empty stream
+    if table.current_version() is None:  # empty stream
         return spark.createDataFrame([], _HISTORY_SCHEMA)
+    return table.read()
 
 
 @query(

@@ -5,8 +5,8 @@
 item 6: a judge/next round should read ONE table, not 19 JSONs). The
 row text is curated here — the sidecars are immutable historical
 artifacts, so curation cannot drift — and the generator enforces the
-two invariants that CAN drift: every SCALE_*.json on disk has a row,
-and every row's file exists. tests/test_docs_sync.py re-runs the
+two invariants that CAN drift: every SCALE_r*.json and
+REGISTRY_SCAN_*.json on disk has a row, and every row's file exists. tests/test_docs_sync.py re-runs the
 generator and asserts the committed index is byte-identical.
 
 Usage: python scripts/gen_scale_index.py [--check]
@@ -80,7 +80,8 @@ ROWS: dict[str, tuple[str, str, str]] = {
     ),
     "SCALE_r07_bloom.json": (
         "1M-order change-feed fixture",
-        "bloom change-feed pruning A/B",
+        "bloom change-feed pruning A/B (written by "
+        "`scripts/bloom_pruning_demo.py --out SCALE_r07_bloom.json`)",
         "99.55% of fact exchange rows pruned",
     ),
     "SCALE_r07_cands.json": (
@@ -149,7 +150,8 @@ ROWS: dict[str, tuple[str, str, str]] = {
         "30x documents, 40 micro-batches in 4 sessions",
         "span-registry MAINTENANCE LOOP: retention compaction "
         "(retain 5) between sessions, churned replay traffic past the "
-        "horizon",
+        "horizon (written by `scripts/span_registry_steady_state.py "
+        "--out SCALE_r09_stream_spans_steady.json`)",
         "bounded sawtooth: steady-state peak ratio 1.001, "
         "post-compaction floor constant (~42 MB), re-admission "
         "measured per compaction (~888k hashes = exactly the "
@@ -170,6 +172,12 @@ ROWS: dict[str, tuple[str, str, str]] = {
         "strict 256->125 s (2.05x); disk envelopes intact (72.0/20.0 "
         "GB); cumulative over both optimization rounds 4289->313 s "
         "(13.7x)",
+    ),
+    "REGISTRY_SCAN_sf1.json": (
+        "sf1.0 (make_scale_fixture --factor 10)",
+        "every registered query run once at sf1.0 (written by "
+        "`scripts/full_registry_scan.py <sf1.0 dir> REGISTRY_SCAN_sf1.json`)",
+        "240 ok / 0 errors in 764 s; slowest curation_pipeline_v3 21.8 s",
     ),
 }
 
@@ -197,7 +205,8 @@ def render() -> str:
 def main() -> int:
     on_disk = {
         os.path.basename(p)
-        for p in glob.glob(os.path.join(_ROOT, "SCALE_r*.json"))
+        for pattern in ("SCALE_r*.json", "REGISTRY_SCAN_*.json")
+        for p in glob.glob(os.path.join(_ROOT, pattern))
     }
     unlisted = sorted(on_disk - set(ROWS))
     if unlisted:

@@ -32,6 +32,15 @@ def test_caller_daemon_module_wins():
     assert conf["spark.python.daemon.module"] == "pyspark.daemon"
 
 
+def test_driver_heap_is_half_the_box_unless_set(monkeypatch):
+    with open("/proc/meminfo") as f:
+        kb = int(next(ln for ln in f if ln.startswith("MemTotal:")).split()[1])
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert start_up_conf()["spark.driver.memory"] == f"{min(kb // 2048, 32768)}m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert start_up_conf()["spark.driver.memory"] == "3g"
+
+
 def test_factory_settings_reach_the_running_context(spark):
     running = spark.sparkContext.getConf()
     for k, v in start_up_conf().items():

@@ -84,6 +84,66 @@ def test_vacuum_zero_keep_is_noop(spark, table):
     assert _rows(table.read()) == {(1, "a"), (2, "B"), (3, "c")}
 
 
+@pytest.mark.parametrize(
+    "seed, batches, want",
+    [
+        # matched key updated, unmatched key inserted
+        ([(1, "a"), (2, "b"), (3, "c")], [[(2, "B"), (4, "d")]],
+         [(1, "a"), (2, "B"), (3, "c"), (4, "d")]),
+        # a merge into a missing table creates it
+        (None, [[(1, "a")]], [(1, "a")]),
+        # a replayed batch (foreachBatch at-least-once delivery) changes nothing
+        ([(1, "a")], [[(1, "A"), (2, "b")]] * 2, [(1, "A"), (2, "b")]),
+    ],
+    ids=["upsert", "merge_creates_missing_table", "replayed_merge_idempotent"],
+)
+def test_default_merge_is_upsert(spark, tmp_path, seed, batches, want):
+    t = SnapshotMergeTable(spark, str(tmp_path / "u"), keys=["k"], n_buckets=8)
+    if seed is not None:
+        t.overwrite(spark.createDataFrame(seed, "k long, v string"))
+    for rows in batches:
+        t.merge(spark.createDataFrame(rows, "k long, v string"))
+    assert sorted(tuple(r) for r in t.read().collect()) == want
+
+
+def test_manifest_moves_only_the_written_buckets(spark, tmp_path):
+    """The new version's bucket set is what its write left on disk: a
+    one-key upsert writes one ``__bucket=`` dir and moves only that
+    bucket's pointer; a one-key merge that empties its bucket writes no
+    dir and drops only that bucket from the manifest."""
+    from pyspark.sql import functions as F
+
+    t = SnapshotMergeTable(spark, str(tmp_path / "w"), keys=["k"], n_buckets=8)
+    t.overwrite(spark.range(0, 40).select(F.col("id").alias("k"), F.lit("x").alias("v")))
+    m0 = t._load_manifest(0)
+    assert len(m0) == 8
+    (b,) = [
+        r["b"]
+        for r in spark.createDataFrame([(7,)], "k long")
+        .select(F.pmod(F.xxhash64("k"), F.lit(8)).cast("int").alias("b"))
+        .collect()
+    ]
+
+    def written(version):
+        return sorted(
+            n for n in os.listdir(t._data_dir(version)) if n.startswith("__bucket=")
+        )
+
+    t.merge(spark.createDataFrame([(7, "y")], "k long, v string"))
+    assert written(1) == [f"__bucket={b}"]
+    assert t._load_manifest(1) == {**m0, str(b): 1}
+
+    t.merge(
+        spark.createDataFrame([(7, "z")], "k long, v string"),
+        merge_fn=lambda existing, updates: existing.limit(0),
+    )
+    assert written(2) == []
+    assert t._load_manifest(2) == {k: v for k, v in m0.items() if k != str(b)}
+    assert t.read().count() == 40 - t.read(version=1).filter(
+        F.pmod(F.xxhash64("k"), F.lit(8)) == b
+    ).count()
+
+
 def test_custom_merge_fn_requires_seeded_table(spark, tmp_path):
     t = SnapshotMergeTable(spark, str(tmp_path / "x"), keys=["k"])
     with pytest.raises(ValueError, match="seed"):
@@ -598,6 +658,30 @@ def test_empty_snapshots_round_trip(spark):
     t.merge(rows, merge_fn=lambda ex, up: ex.join(up, ["k"], "left_anti"))
     assert t.read().count() == 0 and t.read().columns == ["k", "v"]
     assert t.changes(1, 2).count() == 2
+
+
+def test_empty_table_round_trip(spark, tmp_path):
+    """An emptied table is still a table: after a purge down to zero
+    rows the next merge must find it and upsert into it (a new version),
+    not re-seed it as a first write."""
+    t = SnapshotMergeTable(spark, str(tmp_path / "t"), keys=["k"], n_buckets=8)
+    t.overwrite(spark.createDataFrame([], "k long, v string"))
+    assert t.read().count() == 0 and t.read().columns == ["k", "v"]
+    # merge into the existing empty table upserts (not first-write)
+    t.merge(spark.createDataFrame([(1, "a")], "k long, v string"))
+    assert t.current_version() == 1
+    assert _rows(t.read()) == {(1, "a")}
+    # delete back down to zero rows; the table stays readable
+    t.merge(
+        spark.createDataFrame([(1, None)], "k long, v string"),
+        merge_fn=lambda ex, up: ex.join(up, ["k"], "left_anti"),
+    )
+    assert t.current_version() == 2
+    assert t.read().count() == 0 and t.read().columns == ["k", "v"]
+    t.merge(spark.createDataFrame([(2, "b")], "k long, v string"))
+    assert t.current_version() == 3
+    assert _rows(t.read()) == {(2, "b")}
+    assert _rows(t.read(version=1)) == {(1, "a")}
 
 
 def test_change_feed_duplicate_keys_pair_by_row_identity(spark, tmp_path):

@@ -11,6 +11,7 @@ from datetime import datetime
 
 import pandas as pd
 
+from os___mapreduceframework_spark.sinks import SnapshotMergeTable
 from os___mapreduceframework_spark.streaming.scd2 import (
     _rewindow,
     incremental_scd2,
@@ -34,8 +35,8 @@ BATCH2 = [
 ]
 
 
-def _run_stream(spark, *batches):
-    root = tempfile.mkdtemp(prefix="scd2_replay_")
+def _run_stream(spark, *batches, root=None):
+    root = root or tempfile.mkdtemp(prefix="scd2_replay_")
     src = os.path.join(root, "src")
     os.makedirs(src)
     for i, rows in enumerate(batches):
@@ -54,8 +55,8 @@ def _run_stream(spark, *batches):
     return incremental_scd2(ev, os.path.join(root, "history"))
 
 
-def test_streamed_history_equals_batch_rebuild(spark):
-    got = _run_stream(spark, BATCH1, BATCH2)
+def test_streamed_history_equals_batch_rebuild(spark, tmp_path):
+    got = _run_stream(spark, BATCH1, BATCH2, root=str(tmp_path))
     all_events = spark.createDataFrame(
         BATCH1 + BATCH2,
         "user_id long, event_type string, ts timestamp, event_id long",
@@ -71,6 +72,18 @@ def test_streamed_history_equals_batch_rebuild(spark):
     assert [r["state"] for r in u1] == ["a", "c", "b"]
     assert u1[0].valid_to == u1[1].valid_from and u1[1].valid_to == u1[2].valid_from
     assert u1[-1].valid_to is None
+
+    # the history keeps one snapshot, and on disk only the buckets its
+    # manifest points at: the files stay the size of the live table
+    table = SnapshotMergeTable(spark, str(tmp_path / "history"), keys=["user_id"])
+    assert table.versions() == [1]
+    on_disk = {
+        (int(v[1:]), int(b.split("=", 1)[1]))
+        for v in os.listdir(tmp_path / "history" / "data")
+        for b in os.listdir(tmp_path / "history" / "data" / v)
+        if b.startswith("__bucket=")
+    }
+    assert on_disk == {(vdir, int(b)) for b, vdir in table._load_manifest(1).items()}
 
 
 def test_replayed_batch_is_idempotent(spark):
