@@ -1183,14 +1183,31 @@ def keep_first_span_duplicates(docs: DataFrame, w: int = SPAN_W) -> DataFrame:
     row, not all — ``count - countDistinct(h if canonical)`` says both
     at once. Islands then merge per doc over the (strictly smaller)
     non-canonical hit multiset."""
-    wins = _span_window_hashes(docs, w)
+    return _keep_first_spans(_span_window_hashes(docs, w), w)
+
+
+def _keep_first_spans(
+    wins: DataFrame, w: int, seen: DataFrame | None = None
+) -> DataFrame:
+    """The keep-first vote of :func:`keep_first_span_duplicates` over
+    ``(doc_id, start, h)`` window rows. A hash in ``seen`` (the
+    streaming registry) is duplicated even if it occurs once here, and
+    has no canonical here: every occurrence is a hit."""
     pos = F.struct(F.col("doc_id"), F.col("start"))
-    dup = (
-        wins.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("n"), F.min(pos).alias("can"))
-        .filter(F.col("n") > 1)
-        .select("h", "can")
+    dup = wins.groupBy("h").agg(
+        F.count(F.lit(1)).alias("n"), F.min(pos).alias("can")
     )
+    if seen is None:
+        dup = dup.filter(F.col("n") > 1).select("h", "can")
+    else:
+        # shuffle_hash: the registry is corpus-window-sized -- never
+        # assume it broadcasts (same contract as the batch detect)
+        reg = seen.select("h", F.lit(True).alias("_seen")).hint("shuffle_hash")
+        dup = (
+            dup.join(reg, "h", "left")
+            .filter((F.col("n") > 1) | F.col("_seen").isNotNull())
+            .select("h", F.when(F.col("_seen").isNull(), F.col("can")).alias("can"))
+        )
     # shuffle_hash for the same reason as exact_span_duplicates: the
     # duplicated-hash set is corpus-dependent, never assumed broadcast
     hits = (

@@ -219,6 +219,33 @@ def q_quality_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def forward_fill_hourly(hourly: DataFrame) -> DataFrame:
+    """``(user_id, hour, observed, v_filled)``: ``(user_id, hour, v)``
+    rows on each user's hourly grid, ``v`` carried forward. Called by
+    events_gap_fill and its twin stream_gap_fill_hourly."""
+    grid = (
+        hourly.groupBy("user_id")
+        .agg(F.min("hour").alias("lo"), F.max("hour").alias("hi"))
+        .select(
+            "user_id",
+            F.explode(
+                F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
+            ).alias("hour"),
+        )
+    )
+    w = W.partitionBy("user_id").orderBy("hour").rowsBetween(W.unboundedPreceding, 0)
+    return (
+        grid.join(hourly, ["user_id", "hour"], "left")
+        .select(
+            "user_id",
+            F.date_format("hour", "yyyy-MM-dd HH:mm:ss").alias("hour"),
+            F.col("v").isNotNull().alias("observed"),
+            F.last("v", ignorenulls=True).over(w).alias("v_filled"),
+        )
+        .orderBy("user_id", "hour")
+    )
+
+
 @query(
     "events_gap_fill",
     oracle="""
@@ -268,27 +295,7 @@ def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("v")
     )
-    grid = (
-        ev.groupBy("user_id")
-        .agg(F.min("hour").alias("lo"), F.max("hour").alias("hi"))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
-            ).alias("hour"),
-        )
-    )
-    w = W.partitionBy("user_id").orderBy("hour").rowsBetween(W.unboundedPreceding, 0)
-    return (
-        grid.join(hourly, ["user_id", "hour"], "left")
-        .select(
-            "user_id",
-            F.date_format("hour", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            F.col("v").isNotNull().alias("observed"),
-            F.last("v", ignorenulls=True).over(w).alias("v_filled"),
-        )
-        .orderBy("user_id", "hour")
-    )
+    return forward_fill_hourly(hourly)
 
 
 @query(

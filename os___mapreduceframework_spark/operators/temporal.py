@@ -299,6 +299,22 @@ def q_events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lvl", "day", "hour")
 
 
+def scd2_intervals(events: DataFrame) -> DataFrame:
+    """SCD2 validity intervals ``(user_id, state, valid_from, valid_to,
+    version, event_id)`` over ``(user_id, event_type, ts, event_id)``
+    events, ordered by ``(ts, event_id)``. The batch build and both
+    streaming twins (streaming.scd2, stream_pit_enrich) call it."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    return events.select(
+        "user_id",
+        F.col("event_type").alias("state"),
+        F.col("ts").alias("valid_from"),
+        F.lead("ts").over(w).alias("valid_to"),
+        F.row_number().over(w).cast("long").alias("version"),
+        "event_id",
+    )
+
+
 @query(
     "scd2_user_state",
     oracle="""
@@ -323,17 +339,45 @@ def q_events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.select(
-            "user_id",
-            F.col("event_type").alias("state"),
-            F.col("ts").alias("valid_from"),
-            F.lead("ts").over(w).alias("valid_to"),
-            F.row_number().over(w).cast("long").alias("version"),
-        )
-        .orderBy("user_id", "version")
+    return scd2_intervals(ev).drop("event_id").orderBy("user_id", "version")
+
+
+def ohlc_aggs() -> list:
+    """The OHLC candle aggregates ``n, open, high, low, close`` over
+    ``(ts, event_id, value)`` rows, for an hour key (batch) or a
+    tumbling window (streaming)."""
+    # Zero-padded string key orders (ts, event_id) identically on both
+    # engines; the VALUE itself is the final struct-ordering component
+    # because even this key can tie -- a replayed event_id carrying a
+    # corrected value -- and the engines' native tie rules differ
+    # (Spark max_by takes the LAST max, DuckDB arg_max the FIRST).
+    # Contract: among same-key conflicts, open resolves to the SMALLER
+    # value, close to the LARGER, and NULL-valued duplicates lose the
+    # tie (their ordering slot is +-infinity, which finite ingestion
+    # guarantees no real measurement occupies). min/max over a struct
+    # is lexicographic and stays a mergeable four-scalar state.
+    tie = F.concat(
+        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
+        F.lit("_"),
+        F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
+    open_s = F.struct(
+        tie.alias("k"),
+        F.coalesce("value", F.lit(float("inf"))).alias("o"),
+        F.col("value").alias("v"),
+    )
+    close_s = F.struct(
+        tie.alias("k"),
+        F.coalesce("value", F.lit(float("-inf"))).alias("o"),
+        F.col("value").alias("v"),
+    )
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.min(open_s).getField("v"), 4).alias("open"),
+        F.round(F.max("value"), 4).alias("high"),
+        F.round(F.min("value"), 4).alias("low"),
+        F.round(F.max(close_s).getField("v"), 4).alias("close"),
+    ]
 
 
 @query(
@@ -367,40 +411,9 @@ def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_events_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = finite_values(load_table(spark, sf_dir, "events"))
-    # Zero-padded string key orders (ts, event_id) identically on both
-    # engines; the VALUE itself is the final struct-ordering component
-    # because even this key can tie -- a replayed event_id carrying a
-    # corrected value -- and the engines' native tie rules differ
-    # (Spark max_by takes the LAST max, DuckDB arg_max the FIRST).
-    # Contract: among same-key conflicts, open resolves to the SMALLER
-    # value, close to the LARGER, and NULL-valued duplicates lose the
-    # tie (their ordering slot is +-infinity, which finite ingestion
-    # guarantees no real measurement occupies). min/max over a struct
-    # is lexicographic and stays a mergeable four-scalar state.
-    tie = F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lit("_"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
-    open_s = F.struct(
-        tie.alias("k"),
-        F.coalesce("value", F.lit(float("inf"))).alias("o"),
-        F.col("value").alias("v"),
-    )
-    close_s = F.struct(
-        tie.alias("k"),
-        F.coalesce("value", F.lit(float("-inf"))).alias("o"),
-        F.col("value").alias("v"),
-    )
     return (
         ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hour_ts"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.min(open_s).getField("v"), 4).alias("open"),
-            F.round(F.max("value"), 4).alias("high"),
-            F.round(F.min("value"), 4).alias("low"),
-            F.round(F.max(close_s).getField("v"), 4).alias("close"),
-        )
+        .agg(*ohlc_aggs())
         .select(
             "event_type",
             F.date_format("hour_ts", "yyyy-MM-dd HH:mm:ss").alias("hour"),

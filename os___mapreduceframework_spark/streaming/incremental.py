@@ -27,11 +27,18 @@ The reference has no streaming surface (SURVEY.md section 2.3); this is
 charter scope. Its grouping contract is the reference's shuffle
 (MapReduceFramework.cpp:166-230): all values of one key meet in one
 place -- here, one state partition, incrementally.
+
+The streams own only their input side (micro-batch, registry, state
+store); the answer is the batch operator's, called: the span stream
+runs ``operators.dedup._keep_first_spans`` per batch, ``stream_cms_cells``
+runs ``cms_cells``. Both on-disk registries are rewritten by one
+crash-safe ``_swap``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -105,6 +112,29 @@ def incremental_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
+def _recover(d: str) -> None:
+    """Roll a crashed ``_swap`` of ``d`` forward or back: drop an
+    unswapped ``._compact``; restore ``._old`` if ``d`` is missing (the
+    crash hit between the renames), else drop it."""
+    tmp_dir, old_dir = d + "._compact", d + "._old"
+    if os.path.isdir(tmp_dir):
+        shutil.rmtree(tmp_dir)
+    if os.path.isdir(old_dir):
+        if os.path.isdir(d):
+            shutil.rmtree(old_dir)
+        else:
+            os.rename(old_dir, d)
+
+
+def _swap(d: str) -> None:
+    """Replace ``d`` by the rewrite at ``d._compact``. A complete dir
+    is on disk under ``d`` or ``d._old`` at every crash point (ADVICE
+    r8: rmtree-then-rename left a window with none)."""
+    os.rename(d, d + "._old")
+    os.rename(d + "._compact", d)
+    shutil.rmtree(d + "._old")
+
+
 def compact_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Offline consolidation for the incremental MinHash dedup state:
     collapse one-hop assignment chains into full connected components.
@@ -122,7 +152,9 @@ def compact_state(spark: SparkSession, state_dir: str) -> DataFrame:
       existing key under a different canonical.
 
     Both state dirs are rewritten so subsequent micro-batches assign
-    against the compacted canonicals. Returns the compacted assignments
+    against the compacted canonicals; both are written aside while the
+    live dirs (which the plans read) exist, then ``_swap``-ped in.
+    Returns the compacted assignments
     frame (doc_id, cluster_id, is_duplicate). At 100 TB the state is a
     Delta/Iceberg table and this is the periodic MERGE-rewrite job; the
     CC operator is the same min-label propagation as the batch
@@ -132,6 +164,8 @@ def compact_state(spark: SparkSession, state_dir: str) -> DataFrame:
 
     registry_dir = os.path.join(state_dir, "band_registry")
     out_dir = os.path.join(state_dir, "assignments")
+    _recover(out_dir)
+    _recover(registry_dir)
     assignments = spark.read.parquet(out_dir)
     registry = spark.read.parquet(registry_dir)
 
@@ -159,11 +193,7 @@ def compact_state(spark: SparkSession, state_dir: str) -> DataFrame:
         .withColumn(
             "is_duplicate", (F.col("doc_id") != F.col("cluster_id")).cast("int")
         )
-        # materialize before overwriting the dir the plan reads from
-        .localCheckpoint(eager=True)
     )
-    compacted.write.mode("overwrite").parquet(out_dir)
-
     new_registry = (
         registry.join(roots, registry["canonical"] == roots["node"], "left_outer")
         .select(
@@ -173,9 +203,11 @@ def compact_state(spark: SparkSession, state_dir: str) -> DataFrame:
         )
         .groupBy("band", "sig")
         .agg(F.min("canonical").alias("canonical"))
-        .localCheckpoint(eager=True)
     )
-    new_registry.write.mode("overwrite").parquet(registry_dir)
+    compacted.write.parquet(out_dir + "._compact")
+    new_registry.write.parquet(registry_dir + "._compact")
+    _swap(out_dir)
+    _swap(registry_dir)
     return spark.read.parquet(out_dir)
 
 
@@ -212,8 +244,6 @@ def incremental_minhash_dedup(
     Returns the static assignments frame (doc_id, cluster_id,
     is_duplicate) after the stream drains.
     """
-    import shutil
-
     registry_dir = os.path.join(state_dir, "band_registry")
     out_dir = os.path.join(state_dir, "assignments")
     shutil.rmtree(state_dir, ignore_errors=True)
@@ -228,14 +258,12 @@ def incremental_minhash_dedup(
         batch_min = sigs.groupBy("band", "sig").agg(
             F.min("doc_id").alias("batch_canon")
         )
-        try:
+        per_doc = sigs.join(batch_min, ["band", "sig"])
+        # missing dir = first batch; a failed read must raise
+        if os.path.isdir(registry_dir):
             registry = spark.read.parquet(registry_dir).groupBy("band", "sig").agg(
                 F.min("canonical").alias("reg_canon")
             )
-        except Exception:  # first batch: no registry yet
-            registry = None
-        per_doc = sigs.join(batch_min, ["band", "sig"])
-        if registry is not None:
             per_doc = per_doc.join(registry, ["band", "sig"], "left_outer")
         else:
             per_doc = per_doc.withColumn("reg_canon", F.lit(None).cast("long"))
@@ -279,12 +307,11 @@ def incremental_minhash_dedup(
 
     drain(docs_stream, lambda w: w.foreachBatch(process_batch))
     spark = docs_stream.sparkSession
-    try:
-        return spark.read.parquet(out_dir)
-    except Exception:  # empty stream: nothing was written
+    if not os.path.isdir(out_dir):  # empty stream: nothing was written
         return spark.createDataFrame(
             [], "doc_id long, cluster_id long, is_duplicate int"
         )
+    return spark.read.parquet(out_dir)
 
 
 @query(
@@ -355,30 +382,9 @@ from os___mapreduceframework_spark.operators.dedup import (  # noqa: E402
     _SPAN_ISLAND_CTES,
     _SPAN_KEEP_FIRST_ORACLE,
     _SPAN_TOKEN_CTES,
-    _merge_islands,
+    _keep_first_spans,
     _span_window_hashes,
 )
-
-
-def _recover_span_registry(registry_dir: str) -> None:
-    """Roll the registry swap forward/back after a crash (see
-    ``compact_span_registry``): a half-finished compaction leaves
-    ``._compact`` (incomplete write — discard) and/or ``._old`` (the
-    pre-swap registry). If the live dir is missing but ``._old``
-    exists, the crash hit between the two renames — restore the old
-    registry (losing only the compaction, never the dedup memory).
-    If both exist, the swap completed — drop the leftover."""
-    import shutil
-
-    tmp_dir = registry_dir + "._compact"
-    old_dir = registry_dir + "._old"
-    if os.path.isdir(tmp_dir):
-        shutil.rmtree(tmp_dir)
-    if os.path.isdir(old_dir):
-        if os.path.isdir(registry_dir):
-            shutil.rmtree(old_dir)
-        else:
-            os.rename(old_dir, registry_dir)
 
 
 def incremental_span_dedup(
@@ -398,8 +404,8 @@ def incremental_span_dedup(
        (operators.dedup._span_window_hashes — the batch detect stage);
     2. a window occurrence is NON-CANONICAL (a removal hit) iff its
        hash was registered by ANY earlier batch, or an earlier
-       occurrence exists in this batch (the same least-(doc_id, start)
-       vote as the batch keep-first query, scoped to the batch);
+       occurrence exists in this batch (the batch keep-first query's
+       own vote, ``_keep_first_spans``, with the registry as ``seen``);
     3. merge each doc's hits into maximal spans (gaps-and-islands —
        documents are atomic within a batch, so the merge is complete
        at arrival) and append them to the output;
@@ -446,16 +452,12 @@ def incremental_span_dedup(
     sessions). Batch stamps continue from the registry's max(b)+1 so
     ``retain_batches`` horizons stay monotone across sessions; a
     half-finished compaction swap is rolled forward/back first
-    (``_recover_span_registry``).
+    (``_recover``).
 
     Returns the static spans frame
     ``(doc_id, span_start, span_end, n_windows)`` after the stream
     drains.
     """
-    import shutil
-
-    from pyspark.sql import Window
-
     registry_dir = os.path.join(state_dir, "window_registry")
     out_dir = os.path.join(state_dir, "spans")
     batch_base = 0
@@ -463,7 +465,7 @@ def incremental_span_dedup(
         shutil.rmtree(state_dir, ignore_errors=True)
     else:
         shutil.rmtree(out_dir, ignore_errors=True)
-        _recover_span_registry(registry_dir)
+        _recover(registry_dir)
         if os.path.isdir(registry_dir):
             prior = docs_stream.sparkSession.read.parquet(registry_dir)
             # the window hash became a 16-byte binary digest in r10; a
@@ -486,16 +488,6 @@ def incremental_span_dedup(
         if not batch_df.take(1):
             return
         wins = _span_window_hashes(batch_df, w).cache()
-        wh = Window.partitionBy("h")
-        ranked = wins.withColumn("n", F.count(F.lit(1)).over(wh)).withColumn(
-            "rn",
-            F.row_number().over(
-                wh.orderBy(
-                    F.col("doc_id").asc_nulls_first(),
-                    F.col("start").asc_nulls_first(),
-                )
-            ),
-        )
         # Missing-path ONLY means "no memory yet" (first batch of a
         # fresh session). Any other read failure must raise: swallowing
         # it would silently forget every registered window (ADVICE r8 —
@@ -505,25 +497,12 @@ def incremental_span_dedup(
             seen = spark.read.parquet(registry_dir).select("h").distinct()
         else:
             seen = None
-        if seen is not None:
-            # shuffle_hash: the registry is corpus-window-sized — never
-            # assume it broadcasts (same contract as the batch detect)
-            ranked = ranked.join(
-                seen.withColumn("_seen", F.lit(1)).hint("shuffle_hash"),
-                "h",
-                "left",
-            )
-        else:
-            ranked = ranked.withColumn("_seen", F.lit(None).cast("int"))
-        hits = ranked.filter(
-            F.col("_seen").isNotNull() | ((F.col("n") > 1) & (F.col("rn") > 1))
-        ).select("doc_id", "start", (F.col("start") + w - 1).alias("end"))
         # spans first (the plan reads the OLD registry listing), then
         # the registry append — never the reverse. The batch stamp
         # makes max(b) per hash a LAST-SEEN marker (every batch
         # re-appends the hashes it touched), which is what the
         # retention compaction keys on.
-        _merge_islands(hits).write.mode("append").parquet(out_dir)
+        _keep_first_spans(wins, w, seen).write.mode("append").parquet(out_dir)
         wins.select("h").distinct().withColumn(
             "b", F.lit(batch_base + batch_id).cast("long")
         ).write.mode("append").parquet(registry_dir)
@@ -533,12 +512,11 @@ def incremental_span_dedup(
 
     drain(docs_stream, lambda w: w.foreachBatch(process_batch))
     spark = docs_stream.sparkSession
-    try:
-        return spark.read.parquet(out_dir)
-    except Exception:  # empty stream or no duplicated windows at all
+    if not os.path.isdir(out_dir):  # empty stream: nothing was written
         return spark.createDataFrame(
             [], "doc_id long, span_start long, span_end long, n_windows long"
         )
+    return spark.read.parquet(out_dir)
 
 
 def compact_span_registry(
@@ -554,15 +532,10 @@ def compact_span_registry(
     grows with TRAFFIC while the distinct state grows only with novel
     windows. Compaction folds the log back to the state: max(b) per h
     is the last-seen stamp, the retention filter drops the horizon's
-    tail, and the rewrite is a crash-safe swap: the new listing is
-    written aside (``._compact``), the live dir renamed to ``._old``,
-    the new dir renamed in, THEN ``._old`` is removed — at every crash
-    point a complete registry exists on disk under ``registry`` or
-    ``._old``, and ``_recover_span_registry`` (run at the next
-    compaction or resumed session) rolls the swap forward or back
-    (ADVICE r8: the old rmtree-then-rename order had a window with NO
-    registry, which the read path would have treated as first-batch,
-    silently losing all dedup memory). Dropping a hash re-admits its
+    tail, and the rewrite is written aside (``._compact``) and swapped
+    in crash-safely (``_swap``, the same swap ``compact_state`` runs on
+    the MinHash registry; ``_recover`` rolls a crashed one forward or
+    back at the next compaction or resumed session). Dropping a hash re-admits its
     NEXT occurrence as a fresh canonical; it never un-removes spans
     already emitted. At 100 TB this is the registry table's
     MERGE+VACUUM maintenance job, run between streaming sessions
@@ -570,10 +543,8 @@ def compact_span_registry(
 
     Returns {"rows_before", "rows_after", "bytes_before", "bytes_after"}.
     """
-    import shutil
-
     registry_dir = os.path.join(state_dir, "window_registry")
-    _recover_span_registry(registry_dir)
+    _recover(registry_dir)
     if not os.path.isdir(registry_dir):
         # a session over an EMPTY corpus never fires a batch, so no
         # registry dir exists: nothing to compact, and the next
@@ -604,15 +575,12 @@ def compact_span_registry(
         horizon = log.agg(F.max("b")).collect()[0][0] or 0
         state = state.filter(F.col("b") > horizon - retain_batches)
     tmp_dir = registry_dir + "._compact"
-    old_dir = registry_dir + "._old"
-    state.write.mode("overwrite").parquet(tmp_dir)
+    state.write.parquet(tmp_dir)
     rows_after, bytes_after = (
         spark.read.parquet(tmp_dir).count(),
         _dir_bytes(tmp_dir),
     )
-    os.rename(registry_dir, old_dir)
-    os.rename(tmp_dir, registry_dir)
-    shutil.rmtree(old_dir)
+    _swap(registry_dir)
     return {
         "rows_before": rows_before,
         "rows_after": rows_after,

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from os___mapreduceframework_spark.operators.temporal import scd2_intervals
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.sources import load_table, valid_event_times
 from os___mapreduceframework_spark.streaming.windows import (
@@ -218,27 +219,14 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     "interval join.",
 )
 def q_stream_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     # the dim feed derives from the same event source as the fact
     # stream: the temporal-validity ingestion contract applies to both
     # halves or version numbers drift between them
     ev_static = valid_event_times(load_table(spark, sf_dir, "events"))
-    vw = W.partitionBy("user_id").orderBy("ts", "event_id")
-    dim = (
+    dim = scd2_intervals(
         ev_static.filter(F.col("event_type") != "purchase")
-        .select(
-            F.col("user_id").alias("d_user"),
-            F.col("ts").alias("valid_from"),
-            F.col("event_type").alias("state"),
-            F.row_number().over(vw).cast("long").alias("version"),
-        )
-        .withColumn(
-            "valid_to",
-            F.lead("valid_from").over(
-                W.partitionBy("d_user").orderBy("valid_from", "version")
-            ),
-        )
+    ).select(
+        F.col("user_id").alias("d_user"), "valid_from", "valid_to", "state", "version"
     )
     facts = events_stream(spark, sf_dir).filter(
         F.col("event_type") == "purchase"

@@ -6,11 +6,12 @@ foreachBatch merge-recompute:
 
 per micro-batch, only the batch's AFFECTED users are touched -- their
 existing history rows are folded back to events, unioned with the new
-events, and their intervals recomputed with the same lead()/row_number()
-windows as the batch operator; every other user's rows pass through
-untouched. The recompute-per-affected-key design makes the maintenance
-idempotent under replays (deterministic one-winner dedup per
-(user_id, event_id), see ``_dedup_events``) and
+events, and their intervals recomputed by the batch operator's own
+``operators.temporal.scd2_intervals`` (the answer is defined once; this
+module owns only the input side -- replay dedup and the MERGE); every
+other user's rows pass through untouched. The recompute-per-affected-key
+design makes the maintenance idempotent under replays (deterministic
+one-winner dedup per (user_id, event_id), see ``_dedup_events``) and
 correct under late/out-of-order arrivals across batches -- a late event
 splices into its user's timeline because the user's whole (small)
 history is re-windowed, while the table-wide cost stays proportional to
@@ -36,6 +37,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from os___mapreduceframework_spark.operators.temporal import scd2_intervals
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.scratch import scratch_dir
 from os___mapreduceframework_spark.sinks import SnapshotMergeTable
@@ -69,20 +71,6 @@ def _dedup_events(events: DataFrame) -> DataFrame:
     )
 
 
-def _rewindow(events: DataFrame) -> DataFrame:
-    """The batch SCD2 shape, keeping event_id for replay-dedup and
-    deterministic tie-break."""
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.select(
-        "user_id",
-        F.col("event_type").alias("state"),
-        F.col("ts").alias("valid_from"),
-        F.lead("ts").over(w).alias("valid_to"),
-        F.row_number().over(w).cast("long").alias("version"),
-        "event_id",
-    )
-
-
 def _scd2_merge(existing: DataFrame, batch: DataFrame) -> DataFrame:
     """MERGE body over the affected-bucket slice: non-affected users in
     the slice pass through; affected users' history rows fold back to
@@ -96,7 +84,7 @@ def _scd2_merge(existing: DataFrame, batch: DataFrame) -> DataFrame:
         "event_id",
     )
     merged = _dedup_events(prior_events.unionByName(batch))
-    return keep.unionByName(_rewindow(merged))
+    return keep.unionByName(scd2_intervals(merged))
 
 
 def incremental_scd2(
@@ -118,7 +106,7 @@ def incremental_scd2(
             return
         batch = batch_df.select("user_id", "event_type", "ts", "event_id")
         if table.current_version() is None:
-            table.overwrite(_rewindow(_dedup_events(batch)))
+            table.overwrite(scd2_intervals(_dedup_events(batch)))
             return
         table.merge(batch, merge_fn=_scd2_merge)
         table.vacuum(keep_last=1)

@@ -25,9 +25,11 @@ import shutil
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from os___mapreduceframework_spark.operators.quality import forward_fill_hourly
+from os___mapreduceframework_spark.operators.temporal import ohlc_aggs
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.scratch import scratch_dir
 from os___mapreduceframework_spark.sources.registry import (
@@ -500,36 +502,10 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def q_stream_ohlc_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = finite_values(events_stream(spark, sf_dir))
-    # same ordering contract as events_ohlc_hourly (operators/
-    # temporal.py): zero-padded (ts, event_id) key, value as the final
-    # ordering component so a replayed event_id with a corrected value
-    # cannot produce an engine-dependent winner; NULL-valued
-    # duplicates lose ties via the +-infinity ordering slot
-    tie = F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lit("_"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
-    open_s = F.struct(
-        tie.alias("k"),
-        F.coalesce("value", F.lit(float("inf"))).alias("o"),
-        F.col("value").alias("v"),
-    )
-    close_s = F.struct(
-        tie.alias("k"),
-        F.coalesce("value", F.lit(float("-inf"))).alias("o"),
-        F.col("value").alias("v"),
-    )
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.min(open_s).getField("v"), 4).alias("open"),
-            F.round(F.max("value"), 4).alias("high"),
-            F.round(F.min("value"), 4).alias("low"),
-            F.round(F.max(close_s).getField("v"), 4).alias("close"),
-        )
+        .agg(*ohlc_aggs())
     )
     out = run_to_completion(agg, "complete")
     return out.select(
@@ -614,29 +590,7 @@ def q_stream_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", F.col("window.start").alias("hour"), "v")
         .localCheckpoint(eager=False)
     )
-    grid = (
-        hourly.groupBy("user_id")
-        .agg(F.min("hour").alias("lo"), F.max("hour").alias("hi"))
-        .select(
-            "user_id",
-            F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias(
-                "hour"
-            ),
-        )
-    )
-    w = W.partitionBy("user_id").orderBy("hour").rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    return (
-        grid.join(hourly, ["user_id", "hour"], "left")
-        .select(
-            "user_id",
-            F.date_format("hour", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            F.col("v").isNotNull().alias("observed"),
-            F.last("v", ignorenulls=True).over(w).alias("v_filled"),
-        )
-        .orderBy("user_id", "hour")
-    )
+    return forward_fill_hourly(hourly)
 
 
 @query(

@@ -15,7 +15,18 @@ so ratios stay comparable (documented in SCALE_r07.json):
   * spark.cleaner.periodicGC.interval=45s -- reclaim shuffle files of
     dereferenced stages DURING the run, not 30 min later.
 
-Usage: python scripts/emb_scale_point.py QUERY DIR RUNS BUDGET_SEC
+A sampler thread reads free disk (under /tmp) and the 1-minute load
+every 15 s while the point runs, so the record carries the peak
+transient disk (the binding constraint on a one-box run) and the load
+profile OVER the run, not just at its start -- SCALE_r07_strict.json's
+strict_600k entries showed start-time load does not predict steal over
+a 10-minute run.
+
+Usage: python scripts/emb_scale_point.py QUERY DIR [RUNS] [BUDGET_SEC] [OUT]
+Prints (and, given OUT, writes) one JSON object: query, dir, load_1m,
+sec_min or error, samples, disk_free_gb {start, min}, peak_transient_gb,
+load_profile {samples, min, median, max}. (SCALE_r08-r10.json name the
+retired wrapper emb_scale_point_monitored.py, whose record this is.)
 """
 
 from __future__ import annotations
@@ -23,7 +34,9 @@ from __future__ import annotations
 import gc
 import json
 import os
+import shutil
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -32,10 +45,27 @@ from os___mapreduceframework_spark import queries as registry
 from os___mapreduceframework_spark.session import get_session
 
 
+def free_gb() -> float:
+    return shutil.disk_usage("/tmp").free / (1 << 30)
+
+
 def main() -> int:
     name, d = sys.argv[1], sys.argv[2]
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     budget = float(sys.argv[4]) if len(sys.argv) > 4 else 420.0
+    out_path = sys.argv[5] if len(sys.argv) > 5 else None
+
+    start_free = free_gb()
+    stats = {"min_free": start_free, "loads": []}
+    stop = threading.Event()
+
+    def sampler() -> None:
+        while not stop.wait(15):
+            stats["min_free"] = min(stats["min_free"], free_gb())
+            stats["loads"].append(round(os.getloadavg()[0], 1))
+
+    t = threading.Thread(target=sampler, daemon=True)
+    t.start()
 
     spark = get_session(
         app_name=f"emb_scale_{name}",
@@ -64,7 +94,24 @@ def main() -> int:
     except Exception as ex:  # noqa: BLE001 -- the DNF itself is the datum
         out["error"] = f"{type(ex).__name__}: {str(ex)[:300]}"
     out["samples"] = samples
-    print(json.dumps(out))
+
+    stop.set()
+    t.join(timeout=1)
+    loads = stats["loads"]
+    out["disk_free_gb"] = {"start": round(start_free, 1),
+                           "min": round(stats["min_free"], 1)}
+    out["peak_transient_gb"] = round(start_free - stats["min_free"], 1)
+    out["load_profile"] = {
+        "samples": len(loads),
+        "min": min(loads) if loads else None,
+        "median": sorted(loads)[len(loads) // 2] if loads else None,
+        "max": max(loads) if loads else None,
+    }
+    line = json.dumps(out)
+    print(line)
+    if out_path:
+        with open(out_path, "w") as f:
+            f.write(line + "\n")
     return 0
 
 

@@ -127,7 +127,8 @@ ROWS: dict[str, tuple[str, str, str]] = {
     "SCALE_r08.json": (
         "1M vectors (sf50emb), both families",
         "one-box envelope at 1M: calibration ceiling probe + strict "
-        "fill-in point",
+        "fill-in point (one `scripts/emb_scale_point.py` process per "
+        "point)",
         "both COMPLETE: 0.45 family 4289s/73.7 GB peak (the disk "
         "ceiling), 0.90 family 1448s/20 GB; 1.27 µs/candidate flat",
     ),
@@ -141,7 +142,7 @@ ROWS: dict[str, tuple[str, str, str]] = {
         "200k / 1M embeddings (quiet box, warm-min of 2)",
         "heavy embedding points re-measured after the r9 pair-scoring "
         "vectorization (numpy batch replaces the per-candidate JVM "
-        "fold)",
+        "fold; one `scripts/emb_scale_point.py` process per point)",
         "1M calibration 4289->530 s (8.1x; 0.157 µs/candidate, was "
         "1.27), 1M strict 1448->256 s; disk envelopes unchanged "
         "(73.5/17.3 GB) -- closes VERDICT r8 item 2's quiet re-run",
@@ -167,7 +168,8 @@ ROWS: dict[str, tuple[str, str, str]] = {
         "200k / 1M embeddings (same fixtures/method as SCALE_r09)",
         "heavy embedding points re-measured after the r10 carry-vector "
         "banding restructure (salt window, corpus join and bridge "
-        "joins deleted; raw-bytes vector transport)",
+        "joins deleted; raw-bytes vector transport; one "
+        "`scripts/emb_scale_point.py` process per point)",
         "1M calibration 530->313 s (1.7x; 0.093 µs/candidate), 1M "
         "strict 256->125 s (2.05x); disk envelopes intact (72.0/20.0 "
         "GB); cumulative over both optimization rounds 4289->313 s "

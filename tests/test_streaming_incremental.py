@@ -112,16 +112,19 @@ def test_registered_query_matches_oracle_shape(spark, duck):
     assert_matches_oracle(q.fn(spark, TEST_SF_DIR), duck, q.oracle)
 
 
-def _run_minhash_two_batches(spark, batch1: list[tuple], batch2: list[tuple]):
+def _run_minhash_two_batches(
+    spark, batch1: list[tuple], batch2: list[tuple], root: str | None = None
+):
     """Stream two parquet files of (doc_id, text) one per micro-batch
-    through incremental_minhash_dedup; return {doc_id: cluster_id}."""
+    through incremental_minhash_dedup (state under ``root/state``);
+    return {doc_id: cluster_id}."""
     import shutil
 
     from os___mapreduceframework_spark.streaming.incremental import (
         incremental_minhash_dedup,
     )
 
-    root = tempfile.mkdtemp(prefix="inc_mh_")
+    root = root or tempfile.mkdtemp(prefix="inc_mh_")
     src = os.path.join(root, "src")
     os.makedirs(src)
     cols = ["doc_id", "text"]
@@ -184,9 +187,76 @@ def test_minhash_short_doc_is_own_cluster(spark):
     assert got == {1: 1, 2: 2}
 
 
+def test_minhash_unreadable_registry_raises(spark, monkeypatch):
+    # the band registry turns unreadable between batch 1 and batch 2
+    # (its files vanish, the dir stays). Batch 2 must fail the stream:
+    # assigning it as if no registry existed would silently forget
+    # every cluster batch 1 registered.
+    from os___mapreduceframework_spark.streaming import incremental
+
+    root = tempfile.mkdtemp(prefix="inc_mh_unreadable_")
+    registry_dir = os.path.join(root, "state", "band_registry")
+    calls = itertools.count(1)
+    real = incremental.band_signatures
+
+    def empties_registry_on_second_call(df):
+        if next(calls) == 2:
+            for f in os.listdir(registry_dir):
+                os.remove(os.path.join(registry_dir, f))
+        return real(df)
+
+    monkeypatch.setattr(
+        incremental, "band_signatures", empties_registry_on_second_call
+    )
+    same = _doc(*WORDS, *WORDS)
+    try:
+        with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
+            _run_minhash_two_batches(
+                spark, batch1=[(10, same)], batch2=[(3, same)], root=root
+            )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 # ---------------------------------------------------------------------------
 # compaction: one-hop chains -> full connected components (compact_state)
 # ---------------------------------------------------------------------------
+
+
+def _synthetic_minhash_state(state_dir: str) -> str:
+    """Write MinHash dedup state with a one-hop chain (3 -> 2 -> 1), a
+    singleton (9) and a registry collision linking 7 and 5."""
+    out_dir = os.path.join(state_dir, "assignments")
+    reg_dir = os.path.join(state_dir, "band_registry")
+    os.makedirs(out_dir)
+    os.makedirs(reg_dir)
+    pd.DataFrame(
+        [(1, 1, 0), (2, 1, 1), (3, 2, 1), (5, 5, 0), (7, 7, 0), (9, 9, 0)],
+        columns=["doc_id", "cluster_id", "is_duplicate"],
+    ).to_parquet(os.path.join(out_dir, "p.parquet"))
+    pd.DataFrame(
+        [(0, "s1", 1), (1, "s2", 5), (1, "s2", 7)],
+        columns=["band", "sig", "canonical"],
+    ).to_parquet(os.path.join(reg_dir, "p.parquet"))
+    return state_dir
+
+
+# compact_state over _synthetic_minhash_state
+_COMPACTED = {
+    1: (1, 0),
+    2: (1, 1),
+    3: (1, 1),  # chain collapsed: was 3 -> 2
+    5: (5, 0),
+    7: (5, 1),  # registry collision merged 7 into 5
+    9: (9, 0),
+}
+
+
+def _assignments(df) -> dict:
+    return {
+        int(r.doc_id): (int(r.cluster_id), int(r.is_duplicate))
+        for r in df.collect()
+    }
 
 
 def test_compact_state_collapses_chains_and_registry_collisions(spark):
@@ -198,33 +268,9 @@ def test_compact_state_collapses_chains_and_registry_collisions(spark):
     probabilistic by nature)."""
     from os___mapreduceframework_spark.streaming.incremental import compact_state
 
-    root = tempfile.mkdtemp(prefix="compact_")
-    out_dir = os.path.join(root, "assignments")
+    root = _synthetic_minhash_state(tempfile.mkdtemp(prefix="compact_"))
     reg_dir = os.path.join(root, "band_registry")
-    os.makedirs(out_dir)
-    os.makedirs(reg_dir)
-    # chain: 3 -> 2 -> 1; singleton 9; registry collision links 7 and 5
-    pd.DataFrame(
-        [(1, 1, 0), (2, 1, 1), (3, 2, 1), (5, 5, 0), (7, 7, 0), (9, 9, 0)],
-        columns=["doc_id", "cluster_id", "is_duplicate"],
-    ).to_parquet(os.path.join(out_dir, "p.parquet"))
-    pd.DataFrame(
-        [(0, "s1", 1), (1, "s2", 5), (1, "s2", 7)],
-        columns=["band", "sig", "canonical"],
-    ).to_parquet(os.path.join(reg_dir, "p.parquet"))
-
-    got = {
-        int(r.doc_id): (int(r.cluster_id), int(r.is_duplicate))
-        for r in compact_state(spark, root).collect()
-    }
-    assert got == {
-        1: (1, 0),
-        2: (1, 1),
-        3: (1, 1),  # chain collapsed: was 3 -> 2
-        5: (5, 0),
-        7: (5, 1),  # registry collision merged 7 into 5
-        9: (9, 0),
-    }
+    assert _assignments(compact_state(spark, root)) == _COMPACTED
     # on-disk registry rewritten: one row per key, compacted canonicals
     reg = {
         (int(r.band), str(r.sig)): int(r.canonical)
@@ -327,6 +373,15 @@ def test_spans_keep_first_within_batch_and_canonical_survives(spark):
         batch2=[(9, _T25)],
     )
     assert got == {7: [(1, 25, 6)], 9: [(1, 25, 6)]}
+    # a window registered in batch 1 that occurs twice in batch 2 (a
+    # replayed doc row): its canonical arrived earlier, so neither
+    # batch-2 occurrence is kept -- n_windows counts both copies
+    got = _run_spans_two_batches(
+        spark,
+        batch1=[(5, _T25)],
+        batch2=[(9, _T25), (9, _T25)],
+    )
+    assert got == {9: [(1, 25, 12)]}
 
 
 def test_spans_registry_compaction_preserves_dedup_memory(spark):
@@ -497,38 +552,62 @@ def test_spans_fresh_session_forgets_by_design(spark):
 
 
 def test_spans_registry_swap_crash_recovery(spark):
-    # every crash point of the compaction swap leaves a recoverable
-    # state: (a) ._compact only -> discarded; (b) live dir renamed to
-    # ._old, new rename not yet done -> ._old restored; (c) both live
-    # and ._old -> leftover dropped. A resumed session after (b) still
-    # dedups (the memory was never lost).
+    # every crash point of a registry rewrite's swap leaves a
+    # recoverable state: (a) ._compact only -> discarded; (b) live dir
+    # renamed to ._old, new rename not yet done -> ._old restored; (c)
+    # both live and ._old -> leftover dropped. Both rewrites run the
+    # one swap: the span registry (a resumed session after (b) still
+    # dedups -- the memory was never lost) and compact_state's two
+    # MinHash dirs (a compaction after (b) still sees every doc).
     import shutil
 
     from os___mapreduceframework_spark.streaming.incremental import (
-        _recover_span_registry,
+        _recover,
+        compact_state,
     )
 
     root = tempfile.mkdtemp(prefix="inc_spans_crash_")
     _spans_session(spark, root, "s1", [(1, _T25)], fresh=True)
-    reg = os.path.join(root, "state", "window_registry")
+    mh_state = _synthetic_minhash_state(os.path.join(root, "mh"))
+    cases = [
+        (
+            [os.path.join(root, "state", "window_registry")],
+            lambda: sorted(
+                int(r.doc_id)
+                for r in _spans_session(
+                    spark, root, "s2", [(9, _T25)], fresh=False
+                ).collect()
+            ),
+            [9],
+        ),
+        (
+            [
+                os.path.join(mh_state, "assignments"),
+                os.path.join(mh_state, "band_registry"),
+            ],
+            lambda: _assignments(compact_state(spark, mh_state)),
+            _COMPACTED,
+        ),
+    ]
+    for dirs, resume, want in cases:
+        # (a) incomplete rewrite
+        for d in dirs:
+            shutil.copytree(d, d + "._compact")
+            _recover(d)
+            assert not os.path.isdir(d + "._compact") and os.path.isdir(d)
 
-    # (a) incomplete compaction write
-    shutil.copytree(reg, reg + "._compact")
-    _recover_span_registry(reg)
-    assert not os.path.isdir(reg + "._compact") and os.path.isdir(reg)
+        # (b) crash between the two renames: NO live dir on disk -- the
+        # exact window ADVICE r8 flagged. The next run restores it.
+        for d in dirs:
+            os.rename(d, d + "._old")
+            assert not os.path.isdir(d)
+        assert resume() == want
 
-    # (b) crash between the two renames: NO live registry on disk --
-    # the exact window ADVICE r8 flagged. Recovery restores it, and a
-    # resumed session flags the replay.
-    os.rename(reg, reg + "._old")
-    assert not os.path.isdir(reg)
-    out2 = _spans_session(spark, root, "s2", [(9, _T25)], fresh=False)
-    assert sorted(int(r.doc_id) for r in out2.collect()) == [9]
-
-    # (c) crash after the swap completed but before cleanup
-    shutil.copytree(reg, reg + "._old")
-    _recover_span_registry(reg)
-    assert not os.path.isdir(reg + "._old") and os.path.isdir(reg)
+        # (c) crash after the swap completed but before cleanup
+        for d in dirs:
+            shutil.copytree(d, d + "._old")
+            _recover(d)
+            assert not os.path.isdir(d + "._old") and os.path.isdir(d)
     shutil.rmtree(root, ignore_errors=True)
 
 

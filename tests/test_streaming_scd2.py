@@ -11,11 +11,9 @@ from datetime import datetime
 
 import pandas as pd
 
+from os___mapreduceframework_spark.operators.temporal import scd2_intervals
 from os___mapreduceframework_spark.sinks import SnapshotMergeTable
-from os___mapreduceframework_spark.streaming.scd2 import (
-    _rewindow,
-    incremental_scd2,
-)
+from os___mapreduceframework_spark.streaming.scd2 import incremental_scd2
 
 _COLS = ["user_id", "event_type", "ts", "event_id"]
 
@@ -61,7 +59,7 @@ def test_streamed_history_equals_batch_rebuild(spark, tmp_path):
         BATCH1 + BATCH2,
         "user_id long, event_type string, ts timestamp, event_id long",
     )
-    want = _rewindow(all_events)
+    want = scd2_intervals(all_events)
     key = lambda r: (r["user_id"], r["version"])
     got_rows = sorted((tuple(r) for r in got.collect()), key=lambda t: (t[0], t[4]))
     want_rows = sorted((tuple(r) for r in want.collect()), key=lambda t: (t[0], t[4]))
