@@ -185,7 +185,6 @@ def _write_record(
     cal_timeline: list[dict],
     *,
     runs: int,
-    isolated: bool,
     load_avg_1m: tuple[float, float],
     calibration: tuple[float, float],
 ) -> None:
@@ -196,15 +195,14 @@ def _write_record(
     tail capture parse it -- BENCH_r02 recorded parsed:null because the
     ~3.5 KB samples payload got truncated mid-object. ``load_avg_1m``
     and ``calibration`` are the (start, end) readings of the run."""
-    sidecar = {"runs_per_query": runs, "stat": "min"}
-    if isolated:
-        sidecar["isolated"] = True
-    sidecar.update(
-        samples=dispersion,
-        per_query_load_1m=per_query_load,
-        cal_timeline=cal_timeline,
-        spread_flagged=_flagged(dispersion),
-    )
+    sidecar = {
+        "runs_per_query": runs,
+        "stat": "min",
+        "samples": dispersion,
+        "per_query_load_1m": per_query_load,
+        "cal_timeline": cal_timeline,
+        "spread_flagged": _flagged(dispersion),
+    }
     with open(".spark_graft_bench_samples.json", "w") as f:
         json.dump(sidecar, f)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -218,13 +216,10 @@ def _write_record(
         # dir present, so cross-round comparability needs the choice
         # recorded in the output (ADVICE r4)
         "sf_dir": SF_DIR,
-        # shared-session is the BASELINE.md-comparable mode; isolated
-        # (fresh JVM per query) has different warmth economics, so a
-        # silent mode switch would shift every ratio (VERDICT r8 item 5)
-        "mode": "isolated" if isolated else "shared",
+        # one session for the whole suite (the BASELINE.md-comparable mode)
+        "mode": "shared",
+        "runs_per_query": runs,
     }
-    if not isolated:
-        record["runs_per_query"] = runs
     # shared-box noise adjudication (VERDICT r6 item 5): the calibration
     # loop is data-independent, so a headline delta that tracks
     # calibration/load drift is the box, one that doesn't is a plan
@@ -234,65 +229,6 @@ def _write_record(
     record["calibration_sec"] = {"start": calibration[0], "end": calibration[1]}
     record["noise"] = _noise_fields(dispersion, cal_timeline)
     print(json.dumps(record))
-
-
-def _run_one(name: str) -> None:
-    """Time one query in THIS process (n_runs samples) and print a JSON
-    line -- the child half of isolation mode."""
-    spark = get_session(app_name=f"bench_{name}")
-    qs = registry.queries()
-    region = spark.read.parquet(os.path.join(SF_DIR, "region.parquet"))
-    materialize(region)
-    materialize(region.mapInPandas(lambda it: it, schema=region.schema))
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    samples = []
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        materialize(qs[name](spark, SF_DIR))
-        samples.append(round(time.perf_counter() - t0, 3))
-    print(json.dumps({"query": name, "samples": samples}))
-
-
-def _main_isolated() -> None:
-    """SPARK_GRAFT_BENCH_ISOLATE=1: one fresh JVM per query. ~15 s of
-    session startup per query buys immunity from cross-query state
-    (codegen caches, shuffle files, Python worker pools, GC debt), so
-    medians become trustworthy -- the diagnostic mode for deciding
-    whether a regression is real or shared-box noise. The default
-    shared-session mode stays the driver-facing fast path."""
-    import subprocess
-
-    cal_spark = get_session(app_name="bench_calibration")
-    load_start, calib_start = _load_avg_1m(), _calibration_sec(cal_spark)
-    timings: dict[str, float] = {}
-    dispersion: dict[str, list[float]] = {}
-    per_query_load: dict[str, float] = {}
-    cal_timeline: list[dict] = []
-    for i, name in enumerate(HEADLINE):
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--one", name],
-            capture_output=True,
-            text=True,
-            check=True,
-        )
-        rec = json.loads(proc.stdout.strip().splitlines()[-1])
-        samples = rec["samples"]
-        timings[name] = min(samples)
-        dispersion[name] = sorted(samples)
-        per_query_load[name] = _load_avg_1m()
-        if (i + 1) % CAL_EVERY == 0:
-            cal_timeline.append(
-                {"after": i, "sec": _calibration_sec(cal_spark, runs=1),
-                 "load_1m": per_query_load[name]}
-            )
-        print(f"# {name}: {timings[name]:.3f}s (isolated)", file=sys.stderr)
-    _write_record(
-        timings, dispersion, per_query_load, cal_timeline,
-        runs=len(next(iter(dispersion.values()), [])),
-        isolated=True,
-        load_avg_1m=(load_start, _load_avg_1m()),
-        calibration=(calib_start, _calibration_sec(cal_spark)),
-    )
 
 
 def main() -> None:
@@ -338,15 +274,9 @@ def main() -> None:
     _write_record(
         timings, dispersion, per_query_load, cal_timeline,
         runs=n_runs,
-        isolated=False,
         load_avg_1m=(load_start, _load_avg_1m()),
         calibration=(calib_start, _calibration_sec(spark)),
     )
 
 if __name__ == "__main__":
-    if len(sys.argv) > 2 and sys.argv[1] == "--one":
-        _run_one(sys.argv[2])
-    elif os.environ.get("SPARK_GRAFT_BENCH_ISOLATE") == "1":
-        _main_isolated()
-    else:
-        main()
+    main()

@@ -27,6 +27,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from os___mapreduceframework_spark.operators.text import (
+    fingerprint_expr,
+    fingerprint_sql,
+)
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.sources import load_table
 
@@ -211,7 +215,7 @@ def q_curation_decontaminate_summary(spark: SparkSession, sf_dir: str) -> DataFr
     keepers AS (
       SELECT MIN(doc_id) AS doc_id
       FROM cdoc
-      GROUP BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+      GROUP BY {fingerprint_sql("text")}
     ),
     survivors AS (
       SELECT d.doc_id, d.source, len(string_split(d.text, ' ')) AS n_tok
@@ -252,9 +256,8 @@ def q_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_shared") >= K_CONTAMINATED)
         .select("doc_id")
     )
-    fingerprint = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
     keepers = (
-        docs.groupBy(fingerprint.alias("fp"))
+        docs.groupBy(fingerprint_expr(F.col("text")).alias("fp"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )

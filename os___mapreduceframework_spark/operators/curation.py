@@ -33,19 +33,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from os___mapreduceframework_spark.operators.dedup import (
-    BLOCK_WORDS,
+    _BOILERPLATE_CTES,
     BOILERPLATE_MAX_FRAC,
     boilerplate_stats,
 )
 from os___mapreduceframework_spark.operators.text import (
+    _PERPLEXITY_CTES,
     PPL_MAX,
     STOPWORDS,
-    _sql_in,
     fingerprint_expr,
+    fingerprint_sql,
     lang_pred_expr,
+    lang_pred_sql,
     perplexity_stats,
     quality_gate_expr,
+    quality_gate_sql,
     stopword_hits,
+    stopword_hits_sql,
 )
 from os___mapreduceframework_spark.queries import query
 from os___mapreduceframework_spark.sources import load_table
@@ -74,31 +78,15 @@ def _with_gates(docs: DataFrame) -> DataFrame:
 
 _GATES_SQL = f"""
     gated AS (
-      SELECT doc_id, source, text,
-             string_split(text, ' ') AS w,
-             len(string_split(text, ' ')) AS n_tokens,
-             length(text) AS n_chars,
-             len(list_filter(string_split(text, ' '),
-                             x -> x IN ({_sql_in(STOPWORDS["en"])}))) AS c_en,
-             len(list_filter(string_split(text, ' '),
-                             x -> x IN ({_sql_in(STOPWORDS["de"])}))) AS c_de,
-             len(list_filter(string_split(text, ' '),
-                             x -> x IN ({_sql_in(STOPWORDS["fr"])}))) AS c_fr,
-             len(list_filter(string_split(text, ' '),
-                             x -> x IN ({_sql_in(STOPWORDS["es"])}))) AS c_es,
-             md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp
+      SELECT doc_id, source, string_split(text, ' ') AS w,
+             length(text) AS n_chars, {fingerprint_sql("text")} AS fp
       FROM documents
     ),
     annotated AS (
-      SELECT doc_id, source, n_tokens, n_chars, fp,
-             c_en / len(w) AS stop_ratio,
-             CASE WHEN c_en >= GREATEST(c_de, c_fr, c_es) THEN 'en'
-                  WHEN c_de >= GREATEST(c_fr, c_es) THEN 'de'
-                  WHEN c_fr >= c_es THEN 'fr'
-                  ELSE 'es' END AS pred_lang,
-             CASE WHEN len(w) BETWEEN 5 AND 100000
-                   AND c_en / len(w) BETWEEN 0.01 AND 0.6
-                  THEN 1 ELSE 0 END AS passes_quality
+      SELECT doc_id, source, len(w) AS n_tokens, n_chars, fp,
+             {stopword_hits_sql("w", STOPWORDS["en"])} / len(w) AS stop_ratio,
+             {lang_pred_sql("w")} AS pred_lang,
+             {quality_gate_sql("w")} AS passes_quality
       FROM gated
     )
 """
@@ -351,40 +339,46 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "text_repetition_filter",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    bg AS (
+# SQL twin of repetition_stats: reads a t(doc_id, w) CTE and ends in
+# rstat(doc_id, top_bigram_count, n_bigrams, n_tokens, n_uniq). Token
+# stats are grouped per doc_id on their own (the Spark side's max per
+# doc), so a replayed doc's rows never multiply its bigram counts.
+_REPETITION_CTES = """
+    rbg AS (
       SELECT doc_id,
              w[CAST(i AS INT)] || ' ' || w[CAST(i + 1 AS INT)] AS bigram
       FROM t, unnest(range(1, len(w))) AS u(i)
       WHERE len(w) >= 2
     ),
-    per_bigram AS (
-      SELECT doc_id, bigram, COUNT(*) AS c FROM bg GROUP BY doc_id, bigram
-    ),
-    stats AS (
-      SELECT doc_id,
-             CAST(MAX(c) AS BIGINT) AS top_bigram_count,
-             CAST(SUM(c) AS BIGINT) AS n_bigrams
-      FROM per_bigram GROUP BY doc_id
-    ),
-    toks AS (
-      -- grouped like the Spark side's max-per-doc: duplicated doc rows
-      -- (ingestion replays) collapse to ONE stats row per doc_id
+    rpb AS (SELECT doc_id, bigram, COUNT(*) AS c FROM rbg GROUP BY doc_id, bigram),
+    rtok AS (
       SELECT doc_id, MAX(len(w)) AS n_tokens,
              MAX(len(list_distinct(w))) AS n_uniq
       FROM t GROUP BY doc_id
+    ),
+    rstat AS (
+      SELECT doc_id,
+             CAST(MAX(c) AS BIGINT) AS top_bigram_count,
+             CAST(SUM(c) AS BIGINT) AS n_bigrams,
+             MAX(n_tokens) AS n_tokens, MAX(n_uniq) AS n_uniq
+      FROM rpb JOIN rtok USING (doc_id) GROUP BY doc_id
     )
-    SELECT s.doc_id,
-           ROUND(s.top_bigram_count / s.n_bigrams, 6) AS top_bigram_frac,
-           ROUND(1.0 - k.n_uniq / k.n_tokens, 6) AS dup_token_ratio,
-           CASE WHEN s.top_bigram_count / s.n_bigrams <= {REP_TOP_MAX}
-                 AND 1.0 - k.n_uniq / k.n_tokens <= {REP_DUP_MAX}
+"""
+
+
+@query(
+    "text_repetition_filter",
+    oracle=f"""
+    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+    {_REPETITION_CTES}
+    SELECT doc_id,
+           ROUND(top_bigram_count / n_bigrams, 6) AS top_bigram_frac,
+           ROUND(1.0 - n_uniq / n_tokens, 6) AS dup_token_ratio,
+           CASE WHEN top_bigram_count / n_bigrams <= {REP_TOP_MAX}
+                 AND 1.0 - n_uniq / n_tokens <= {REP_DUP_MAX}
                 THEN 1 ELSE 0 END AS passes_repetition
-    FROM stats s JOIN toks k ON s.doc_id = k.doc_id
-    ORDER BY s.doc_id
+    FROM rstat
+    ORDER BY doc_id
     """,
     doc="Within-document repetition gate (the Gopher-style repetition "
     "filters): top-bigram mass fraction + duplicate-token ratio, with "
@@ -565,53 +559,14 @@ def q_text_keywords_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS w
                FROM documents),
-    -- gate 1: cross-corpus boilerplate blocks (dedup_boilerplate_blocks)
-    blocks AS (
-      SELECT doc_id,
-             md5(array_to_string(
-               w[CAST(b * {BLOCK_WORDS} + 1 AS INT)
-                 :CAST(b * {BLOCK_WORDS} + {BLOCK_WORDS} AS INT)], ' ')) AS bh
-      FROM t, unnest(range(0, CAST(FLOOR(len(w) / {BLOCK_WORDS}) AS BIGINT)))
-             AS u(b)
-      WHERE len(w) >= {BLOCK_WORDS}
-    ),
-    bcnt AS (SELECT bh, COUNT(DISTINCT doc_id) AS nd FROM blocks GROUP BY bh),
-    bstat AS (
-      SELECT b.doc_id, COUNT(*) AS nb, COUNT(*) FILTER (c.nd > 1) AS ndup
-      FROM blocks b JOIN bcnt c USING (bh) GROUP BY b.doc_id
-    ),
-    -- gate 2: within-doc repetition (text_repetition_filter)
-    rbg AS (
-      SELECT doc_id, w[CAST(i AS INT)] || ' ' || w[CAST(i + 1 AS INT)] AS bigram
-      FROM t, unnest(range(1, len(w))) AS u(i) WHERE len(w) >= 2
-    ),
-    rpb AS (SELECT doc_id, bigram, COUNT(*) AS c FROM rbg GROUP BY doc_id, bigram),
-    rstat AS (
-      SELECT p.doc_id, MAX(p.c) AS topc, SUM(p.c) AS nbg,
-             MAX(len(k.w)) AS ntok, MAX(len(list_distinct(k.w))) AS nuq
-      FROM rpb p JOIN t k USING (doc_id) GROUP BY p.doc_id
-    ),
-    -- gate 3: corpus-trained bigram-LM perplexity (text_perplexity_bigram)
-    pbg AS (
-      SELECT doc_id, w[CAST(i AS INT)] AS w1, w[CAST(i + 1 AS INT)] AS w2
-      FROM t, unnest(range(1, len(w))) AS u(i) WHERE len(w) >= 2
-    ),
-    c2 AS (SELECT w1, w2, COUNT(*)::DOUBLE AS c FROM pbg GROUP BY w1, w2),
-    c1 AS (SELECT w1, SUM(c) AS c1 FROM c2 GROUP BY w1),
-    v AS (SELECT COUNT(*)::DOUBLE AS vsz FROM c1),
-    pstat AS (
-      SELECT pbg.doc_id, EXP(-AVG(LN((c2.c + 1) / (c1.c1 + v.vsz)))) AS ppl
-      FROM pbg
-      JOIN c2 ON c2.w1 = pbg.w1 AND c2.w2 = pbg.w2
-      JOIN c1 ON c1.w1 = pbg.w1
-      CROSS JOIN v
-      GROUP BY pbg.doc_id
-    ),
+    {_BOILERPLATE_CTES},
+    {_REPETITION_CTES},
+    {_PERPLEXITY_CTES},
     flags AS (
       SELECT t.source, len(t.w) AS n_tok,
-             COALESCE(b.ndup / CAST(b.nb AS DOUBLE) <= {BOILERPLATE_MAX_FRAC}, TRUE) AS f_boiler,
-             COALESCE(r.topc / CAST(r.nbg AS DOUBLE) <= {REP_TOP_MAX}
-                      AND 1.0 - r.nuq / CAST(r.ntok AS DOUBLE) <= {REP_DUP_MAX},
+             COALESCE(b.n_dup_blocks / CAST(b.n_blocks AS DOUBLE) <= {BOILERPLATE_MAX_FRAC}, TRUE) AS f_boiler,
+             COALESCE(r.top_bigram_count / CAST(r.n_bigrams AS DOUBLE) <= {REP_TOP_MAX}
+                      AND 1.0 - r.n_uniq / CAST(r.n_tokens AS DOUBLE) <= {REP_DUP_MAX},
                       TRUE) AS f_rep,
              COALESCE(p.ppl <= {PPL_MAX}, TRUE) AS f_ppl
       FROM t

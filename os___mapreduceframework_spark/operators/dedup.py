@@ -49,6 +49,7 @@ from os___mapreduceframework_spark.operators.minhash import (  # noqa: F401
     _EMB_BANDS_SQL,
     _EMB_BANDS_STRICT_SQL,
     _EMB_WEIGHT_DIMS,
+    _SQL_COS4,
     _plane_weights,
     canonical_embeddings,
     emb_strict_bands,
@@ -375,11 +376,11 @@ def embedding_near_exact(emb: DataFrame, threshold: float) -> DataFrame:
     oracle=f"""
     WITH {_EMB_BANDS_SQL}
     SELECT c.vec_a, c.vec_b,
-           CASE WHEN list_inner_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]) = 0 OR list_inner_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]) = 0 THEN NULL ELSE ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) END AS cos_sim
+           {_SQL_COS4} AS cos_sim
     FROM ecand c
     JOIN cemb a ON a.vec_id = c.vec_a
     JOIN cemb b ON b.vec_id = c.vec_b
-    WHERE CASE WHEN list_inner_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]) = 0 OR list_inner_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]) = 0 THEN NULL ELSE ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) END
+    WHERE {_SQL_COS4}
           >= {COSINE_NEAR_THRESHOLD}
     ORDER BY vec_a, vec_b
     """,
@@ -451,7 +452,7 @@ EMB_STRICT_REPORT_FLOOR = 0.30
              AS is_near_dup
     FROM (
       SELECT c.vec_a, c.vec_b,
-             CASE WHEN list_inner_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]) = 0 OR list_inner_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]) = 0 THEN NULL ELSE ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) END AS cos_sim
+             {_SQL_COS4} AS cos_sim
       FROM ecand c
       JOIN cemb a ON a.vec_id = c.vec_a
       JOIN cemb b ON b.vec_id = c.vec_b
@@ -874,10 +875,9 @@ def boilerplate_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "dedup_boilerplate_blocks",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+# SQL twin of boilerplate_stats: reads a t(doc_id, w) CTE and ends in
+# bstat(doc_id, n_blocks, n_dup_blocks)
+_BOILERPLATE_CTES = f"""
     blocks AS (
       SELECT doc_id,
              md5(array_to_string(
@@ -887,20 +887,28 @@ def boilerplate_stats(docs: DataFrame) -> DataFrame:
                 AS u(b)
       WHERE len(w) >= {BLOCK_WORDS}
     ),
-    cnt AS (SELECT bh, COUNT(DISTINCT doc_id) AS nd FROM blocks GROUP BY bh),
-    per_doc AS (
+    bcnt AS (SELECT bh, COUNT(DISTINCT doc_id) AS nd FROM blocks GROUP BY bh),
+    bstat AS (
       SELECT b.doc_id,
              COUNT(*) AS n_blocks,
              COUNT(*) FILTER (c.nd > 1) AS n_dup_blocks
-      FROM blocks b JOIN cnt c USING (bh)
+      FROM blocks b JOIN bcnt c USING (bh)
       GROUP BY b.doc_id
     )
+"""
+
+
+@query(
+    "dedup_boilerplate_blocks",
+    oracle=f"""
+    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+    {_BOILERPLATE_CTES}
     SELECT doc_id, n_blocks, n_dup_blocks,
            ROUND(n_dup_blocks / CAST(n_blocks AS DOUBLE), 6)
              AS boilerplate_frac,
            n_dup_blocks / CAST(n_blocks AS DOUBLE) <= {BOILERPLATE_MAX_FRAC}
              AS passes_boilerplate
-    FROM per_doc
+    FROM bstat
     ORDER BY doc_id
     """,
     doc="CROSS-corpus boilerplate removal (the C4/RefinedWeb 'drop "
@@ -935,7 +943,7 @@ def q_dedup_boilerplate_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ecand c
       JOIN cemb a ON a.vec_id = c.vec_a
       JOIN cemb b ON b.vec_id = c.vec_b
-      WHERE CASE WHEN list_inner_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]) = 0 OR list_inner_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]) = 0 THEN NULL ELSE ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) END
+      WHERE {_SQL_COS4}
             >= {COSINE_NEAR_THRESHOLD}
     ),
     edges AS (SELECT vec_a AS a, vec_b AS b FROM near

@@ -351,6 +351,17 @@ def _cosine(a, b):
     return F.when(denom != 0, dot / denom)
 
 
+def _cosine_sql(a: str, b: str, places: int) -> str:
+    """SQL twin of ``_cosine`` over list expressions ``a`` and ``b``,
+    rounded to ``places``: the zero-vector guard returns NULL where
+    DuckDB's list_cosine_similarity gives -1.0 or NaN."""
+    return (
+        f"CASE WHEN list_inner_product({a}, {a}) = 0"
+        f" OR list_inner_product({b}, {b}) = 0 THEN NULL"
+        f" ELSE ROUND(list_cosine_similarity({a}, {b}), {places}) END"
+    )
+
+
 def _norm(a):
     """sqrt(sum x^2) over an array<double> column -- the exact norm
     factor ``_cosine`` uses, exposed so candidate-verify joins can
@@ -635,6 +646,8 @@ def _emb_bands_sql(nbands_expr: str) -> str:
 
 _EMB_BANDS_SQL = _emb_bands_sql(_NBANDS_EXPR)
 _EMB_BANDS_STRICT_SQL = _emb_bands_sql(_NBANDS_STRICT_EXPR)
+# the candidate-pair cosine the banded oracles verify with (cemb a, b)
+_SQL_COS4 = _cosine_sql("a.embedding::DOUBLE[]", "b.embedding::DOUBLE[]", 4)
 
 
 def _plane_weights(p: int, dim: int) -> list[int]:

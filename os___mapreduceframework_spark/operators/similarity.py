@@ -22,8 +22,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from os___mapreduceframework_spark.operators.minhash import (
     _EMB_BANDS_SQL,
+    _SQL_COS4,
     _cosine,
     _cosine_prenorm,
+    _cosine_sql,
     _norm,
     bucket_pairs,
     canonical_embeddings,
@@ -41,8 +43,7 @@ N_QUERIES = 5  # vec_id < 5 are the query vectors in fixture terms
 TOP_K = 10
 N_PLANES = 8
 
-# zero-vector guard mirrors _cosine: NULL, not DuckDB's -1.0 or NaN
-_SQL_COS = "CASE WHEN list_inner_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]) = 0 OR list_inner_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]) = 0 THEN NULL ELSE ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) END"
+_SQL_COS = _cosine_sql("a.embedding::DOUBLE[]", "b.embedding::DOUBLE[]", 6)
 
 
 @query(
@@ -580,7 +581,7 @@ def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_label_cohesion",
-    oracle="""
+    oracle=f"""
     WITH ex AS (
       SELECT label,
              generate_subscripts(embedding, 1) AS dim,
@@ -594,11 +595,7 @@ def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     cvec AS (SELECT label, list(c ORDER BY dim) AS cv FROM cent GROUP BY label),
     cos AS (
       SELECT e.vec_id, e.label,
-             CASE WHEN list_inner_product(e.embedding::DOUBLE[],
-                         e.embedding::DOUBLE[]) = 0
-                   OR list_inner_product(cv.cv, cv.cv) = 0 THEN NULL
-                  ELSE ROUND(list_cosine_similarity(
-                         e.embedding::DOUBLE[], cv.cv), 6) END AS cs
+             {_cosine_sql("e.embedding::DOUBLE[]", "cv.cv", 6)} AS cs
       FROM embeddings e JOIN cvec cv USING (label)
     )
     SELECT label,
@@ -917,16 +914,6 @@ def q_embedding_whitening_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_COS4_PAIR = (
-    "CASE WHEN list_inner_product(a.embedding::DOUBLE[],"
-    " a.embedding::DOUBLE[]) = 0"
-    " OR list_inner_product(b.embedding::DOUBLE[],"
-    " b.embedding::DOUBLE[]) = 0 THEN NULL"
-    " ELSE ROUND(list_cosine_similarity(a.embedding::DOUBLE[],"
-    " b.embedding::DOUBLE[]), 4) END"
-)
-
-
 @query(
     "ann_knn_join_all",
     oracle="""
@@ -949,7 +936,7 @@ _SQL_COS4_PAIR = (
     FROM cemb e
     LEFT JOIN ranked r ON r.v = e.vec_id AND r.rn = 1
     ORDER BY vec_id
-    """.format(bands=_EMB_BANDS_SQL, cos4=_SQL_COS4_PAIR),
+    """.format(bands=_EMB_BANDS_SQL, cos4=_SQL_COS4),
     doc="ALL-corpus kNN join (k=1): every vector's nearest neighbor, "
     "not just a fixed query set's -- the self-join shape behind "
     "semantic-dedup audits and embedding-quality evaluation. "

@@ -29,12 +29,21 @@ _PUNCT = ".,!?;:"
 QUALITY_TOKENS = (5, 100000)
 QUALITY_STOP_RATIO = (0.01, 0.6)
 
+# Each gate helper below has a SQL twin (``*_sql``, over SQL expression
+# strings) that every DuckDB oracle applying the gate calls.
+
 
 def stopword_hits(w_col, words):
     """Count of tokens in ``w_col`` (array<string>) that are in
     ``words`` -- the stopword-hit primitive under lang-id and quality."""
     arr = F.array(*[F.lit(s) for s in words])
     return F.size(F.filter(w_col, lambda x: F.array_contains(arr, x)))
+
+
+def stopword_hits_sql(w: str, words) -> str:
+    """SQL twin of ``stopword_hits`` over the list expression ``w``."""
+    in_list = ", ".join(f"'{s}'" for s in words)
+    return f"len(list_filter({w}, x -> x IN ({in_list})))"
 
 
 def lang_pred_expr(w_col):
@@ -51,6 +60,16 @@ def lang_pred_expr(w_col):
     )
 
 
+def lang_pred_sql(w: str) -> str:
+    """SQL twin of ``lang_pred_expr``."""
+    c = {lang: stopword_hits_sql(w, words) for lang, words in STOPWORDS.items()}
+    return (
+        f"CASE WHEN {c['en']} >= GREATEST({c['de']}, {c['fr']}, {c['es']}) THEN 'en'"
+        f" WHEN {c['de']} >= GREATEST({c['fr']}, {c['es']}) THEN 'de'"
+        f" WHEN {c['fr']} >= {c['es']} THEN 'fr' ELSE 'es' END"
+    )
+
+
 def quality_gate_expr(w_col):
     """1/0 quality verdict (the exact gate of text_quality): token count
     and en-stopword ratio inside the configured bands."""
@@ -62,14 +81,26 @@ def quality_gate_expr(w_col):
     ).otherwise(0)
 
 
+def quality_gate_sql(w: str) -> str:
+    """SQL twin of ``quality_gate_expr``."""
+    n_stop = stopword_hits_sql(w, STOPWORDS["en"])
+    return (
+        f"CASE WHEN len({w}) BETWEEN {QUALITY_TOKENS[0]} AND {QUALITY_TOKENS[1]}"
+        f" AND {n_stop} / len({w})"
+        f" BETWEEN {QUALITY_STOP_RATIO[0]} AND {QUALITY_STOP_RATIO[1]}"
+        " THEN 1 ELSE 0 END"
+    )
+
+
 def fingerprint_expr(text_col):
     """Normalized-text md5 fingerprint (the exact expression of
     text_fingerprint and the exact-dedup keeper key)."""
     return F.md5(F.lower(F.trim(F.regexp_replace(text_col, r"\s+", " "))))
 
 
-def _sql_in(words) -> str:
-    return ", ".join(f"'{w}'" for w in words)
+def fingerprint_sql(text: str) -> str:
+    """SQL twin of ``fingerprint_expr``."""
+    return f"md5(lower(trim(regexp_replace({text}, '\\s+', ' ', 'g'))))"
 
 
 @query(
@@ -118,7 +149,7 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, text, w,
              length(text) - length(replace(replace(replace(replace(replace(replace(
                  text, '.', ''), ',', ''), '!', ''), '?', ''), ';', ''), ':', '')) AS n_punct,
-             len(list_filter(w, x -> x IN ({_sql_in(STOPWORDS["en"])}))) AS n_stop
+             {stopword_hits_sql("w", STOPWORDS["en"])} AS n_stop
       FROM t
     )
     SELECT doc_id,
@@ -127,9 +158,7 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(n_punct / GREATEST(length(text), 1), 6) AS punct_ratio,
            n_stop,
            ROUND(n_stop / len(w), 6) AS stopword_ratio,
-           CASE WHEN len(w) BETWEEN 5 AND 100000
-                 AND n_stop / len(w) BETWEEN 0.01 AND 0.6
-                THEN 1 ELSE 0 END AS passes_quality
+           {quality_gate_sql("w")} AS passes_quality
     FROM p
     ORDER BY doc_id
     """,
@@ -167,21 +196,9 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_lang_id",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-    scores AS (
-      SELECT doc_id, lang,
-             len(list_filter(w, x -> x IN ({_sql_in(STOPWORDS["en"])}))) AS c_en,
-             len(list_filter(w, x -> x IN ({_sql_in(STOPWORDS["de"])}))) AS c_de,
-             len(list_filter(w, x -> x IN ({_sql_in(STOPWORDS["fr"])}))) AS c_fr,
-             len(list_filter(w, x -> x IN ({_sql_in(STOPWORDS["es"])}))) AS c_es
-      FROM t
-    )
-    SELECT doc_id, lang,
-           CASE WHEN c_en >= GREATEST(c_de, c_fr, c_es) THEN 'en'
-                WHEN c_de >= GREATEST(c_fr, c_es) THEN 'de'
-                WHEN c_fr >= c_es THEN 'fr'
-                ELSE 'es' END AS pred_lang
-    FROM scores
+    WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents)
+    SELECT doc_id, lang, {lang_pred_sql("w")} AS pred_lang
+    FROM t
     ORDER BY doc_id
     """,
     doc="Language ID heuristic: stopword-hit argmax across language "
@@ -200,15 +217,10 @@ def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_fingerprint",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id,
-             lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS norm,
-             string_split(text, ' ') AS w
-      FROM documents
-    )
+    oracle=f"""
+    WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents)
     SELECT doc_id,
-           md5(norm) AS content_md5,
+           {fingerprint_sql("text")} AS content_md5,
            CAST(list_aggregate(
              list_transform(w, t -> ('0x' || substr(md5(t), 1, 7))::BIGINT),
              'sum') AS BIGINT) AS token_hash_sum
@@ -466,10 +478,9 @@ def perplexity_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "text_perplexity_bigram",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+# SQL twin of perplexity_stats: reads a t(doc_id, w) CTE and ends in
+# pstat(doc_id, n_bigrams, ppl) with ppl unrounded
+_PERPLEXITY_CTES = """
     bg AS (
       SELECT doc_id, w[CAST(i AS INT)] AS w1, w[CAST(i + 1 AS INT)] AS w2
       FROM t, unnest(range(1, len(w))) AS u(i)
@@ -477,19 +488,29 @@ def perplexity_stats(docs: DataFrame) -> DataFrame:
     ),
     c2 AS (SELECT w1, w2, COUNT(*)::DOUBLE AS c FROM bg GROUP BY w1, w2),
     c1 AS (SELECT w1, SUM(c) AS c1 FROM c2 GROUP BY w1),
-    v AS (SELECT COUNT(*)::DOUBLE AS vsz FROM c1)
-    SELECT bg.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-           CAST(ROUND(EXP(-AVG(LN((c2.c + 1) / (c1.c1 + v.vsz)))), 4)
-                AS DOUBLE) AS ppl,
-           EXP(-AVG(LN((c2.c + 1) / (c1.c1 + v.vsz)))) <= {PPL_MAX}
-             AS passes_ppl
-    FROM bg
-    JOIN c2 ON c2.w1 = bg.w1 AND c2.w2 = bg.w2
-    JOIN c1 ON c1.w1 = bg.w1
-    CROSS JOIN v
-    GROUP BY bg.doc_id
-    ORDER BY bg.doc_id
+    v AS (SELECT COUNT(*)::DOUBLE AS vsz FROM c1),
+    pstat AS (
+      SELECT bg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+             EXP(-AVG(LN((c2.c + 1) / (c1.c1 + v.vsz)))) AS ppl
+      FROM bg
+      JOIN c2 ON c2.w1 = bg.w1 AND c2.w2 = bg.w2
+      JOIN c1 ON c1.w1 = bg.w1
+      CROSS JOIN v
+      GROUP BY bg.doc_id
+    )
+"""
+
+
+@query(
+    "text_perplexity_bigram",
+    oracle=f"""
+    WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+    {_PERPLEXITY_CTES}
+    SELECT p.doc_id, p.n_bigrams,
+           CAST(ROUND(p.ppl, 4) AS DOUBLE) AS ppl,
+           p.ppl <= {PPL_MAX} AS passes_ppl
+    FROM pstat p
+    ORDER BY p.doc_id
     """,
     doc="Perplexity quality filter (the CCNet/KenLM gate, with the LM "
     "trained on the corpus itself): add-1-smoothed bigram language "
@@ -766,29 +787,14 @@ _CURRICULUM_PCTS = "0.25, 0.5, 0.75"  # quartile stages: easy -> hard
     "training_curriculum_buckets",
     oracle=f"""
     WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    bg AS (
-      SELECT doc_id, w[CAST(i AS INT)] AS w1, w[CAST(i + 1 AS INT)] AS w2
-      FROM t, unnest(range(1, len(w))) AS u(i)
-      WHERE len(w) >= 2
-    ),
-    c2 AS (SELECT w1, w2, COUNT(*)::DOUBLE AS c FROM bg GROUP BY w1, w2),
-    c1 AS (SELECT w1, SUM(c) AS c1 FROM c2 GROUP BY w1),
-    v AS (SELECT COUNT(*)::DOUBLE AS vsz FROM c1),
-    pstat AS (
-      SELECT bg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-             ROUND(EXP(-AVG(LN((c2.c + 1) / (c1.c1 + v.vsz)))), 6) AS ppl_r
-      FROM bg
-      JOIN c2 ON c2.w1 = bg.w1 AND c2.w2 = bg.w2
-      JOIN c1 ON c1.w1 = bg.w1
-      CROSS JOIN v
-      GROUP BY bg.doc_id
-    ),
-    b AS (SELECT quantile_cont(ppl_r, [{_CURRICULUM_PCTS}]) AS bs FROM pstat)
+    {_PERPLEXITY_CTES},
+    pr AS (SELECT doc_id, n_bigrams, ROUND(ppl, 6) AS ppl_r FROM pstat),
+    b AS (SELECT quantile_cont(ppl_r, [{_CURRICULUM_PCTS}]) AS bs FROM pr)
     SELECT CAST(len(list_filter(b.bs, x -> x <= p.ppl_r)) AS INT) AS stage,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(p.n_bigrams) AS BIGINT) AS n_bigrams_total,
            CAST(ROUND(AVG(p.ppl_r), 4) AS DOUBLE) AS avg_ppl
-    FROM pstat p CROSS JOIN b
+    FROM pr p CROSS JOIN b
     GROUP BY 1
     ORDER BY stage
     """,

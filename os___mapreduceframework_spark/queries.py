@@ -12,7 +12,9 @@ Conventions that keep the Spark result and the DuckDB oracle hash-equal:
 - money sums are computed in DECIMAL on both sides (order-independent,
   exact) and cast to double only at the end;
 - other double outputs are rounded to a fixed scale on both sides;
-- timestamp outputs are formatted to strings on both sides.
+- timestamp outputs are formatted to strings on both sides;
+- an oracle applies a gate through the gate's SQL twin beside its Spark
+  helper (e.g. ``text.quality_gate_sql``), never through its own copy.
 """
 
 from __future__ import annotations

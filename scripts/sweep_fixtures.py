@@ -65,7 +65,14 @@ _EDGE_ROWS = {
         ((SELECT max(doc_id) + 9 FROM src),
          'a  b ' || chr(9) || ' c  ', 'en', 'src2', 9::BIGINT),
         ((SELECT max(doc_id) + 10 FROM src),
-         repeat('x', 5000), 'en', 'src0', 5000::BIGINT)
+         repeat('x', 5000), 'en', 'src0', 5000::BIGINT),
+        -- one replayed doc (two rows, one doc_id) whose top bigram sits
+        -- just over the repetition gate: a per-doc stat that joins
+        -- bigram counts back to token rows counts it once per copy
+        ((SELECT max(doc_id) + 11 FROM src),
+         'a b a b c d e f g h', 'en', 'src1', 19::BIGINT),
+        ((SELECT max(doc_id) + 11 FROM src),
+         'a b a b c d e f g h', 'en', 'src1', 19::BIGINT)
       ) v(doc_id, text, lang, source, n_chars)
     """,
     "events": """

@@ -1,12 +1,10 @@
 """Pin bench.py's one record writer: the stdout line (keys, their order,
-values) and the samples sidecar of both modes, on synthetic timings --
-no Spark session."""
+values) and the samples sidecar, on synthetic timings -- no Spark
+session."""
 
 from __future__ import annotations
 
 import json
-
-import pytest
 
 import bench
 
@@ -22,40 +20,36 @@ SHARED_KEYS = [
 ]
 
 
-@pytest.mark.parametrize("isolated", [False, True])
-def test_record_line_and_sidecar(isolated, tmp_path, monkeypatch, capsys):
+def test_record_line_and_sidecar(tmp_path, monkeypatch, capsys):
     monkeypatch.chdir(tmp_path)
     monkeypatch.setattr(bench, "SF_DIR", "/data/sf0.1/")
     bench._write_record(
         TIMINGS, DISPERSION, LOAD, CAL_TIMELINE,
         runs=3,
-        isolated=isolated,
         load_avg_1m=(0.5, 0.75),
         calibration=(0.3, 0.35),
     )
     lines = capsys.readouterr().out.splitlines()
     assert len(lines) == 1
     rec = json.loads(lines[0])
-    keys = [k for k in SHARED_KEYS if not (isolated and k == "runs_per_query")]
-    assert list(rec) == keys
+    assert list(rec) == SHARED_KEYS
     assert rec["metric"] == "headline_suite_wall_sec"
     assert rec["value"] == 1.25 and rec["unit"] == "sec"
     assert rec["queries"] == TIMINGS
     assert rec["sf"] == 0.1 and rec["sf_dir"] == "/data/sf0.1/"
-    assert rec["mode"] == ("isolated" if isolated else "shared")
-    assert rec.get("runs_per_query") == (None if isolated else 3)
+    assert rec["mode"] == "shared"
+    assert rec["runs_per_query"] == 3
     assert rec["load_avg_1m"] == {"start": 0.5, "end": 0.75}
     assert rec["calibration_sec"] == {"start": 0.3, "end": 0.35}
     assert rec["noise"] == {"cal_interleaved": [0.4], "n_spread_flagged": 1}
 
     with open(tmp_path / ".spark_graft_bench_samples.json") as f:
         sidecar = json.load(f)
-    head = ["runs_per_query", "stat"] + (["isolated"] if isolated else [])
-    assert list(sidecar) == head + [
+    assert list(sidecar) == [
+        "runs_per_query", "stat",
         "samples", "per_query_load_1m", "cal_timeline", "spread_flagged",
     ]
     assert sidecar["runs_per_query"] == 3 and sidecar["stat"] == "min"
-    assert sidecar.get("isolated") is (True if isolated else None)
     assert sidecar["samples"] == DISPERSION
     assert sidecar["per_query_load_1m"] == LOAD
     assert sidecar["cal_timeline"] == CAL_TIMELINE

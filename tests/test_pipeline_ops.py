@@ -4,8 +4,10 @@ sweep can't isolate."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
+from os___mapreduceframework_spark import queries as registry
 from os___mapreduceframework_spark.operators.dedup import (
     _shingles,
     lsh_candidates,
@@ -17,6 +19,7 @@ from os___mapreduceframework_spark.operators.multimodal import (
     fake_features,
     with_media_columns,
 )
+from tests.conftest import assert_matches_oracle
 
 
 def _docs(spark, rows):
@@ -28,6 +31,43 @@ def test_shingles_short_text_dropped(spark):
     df = _docs(spark, [(1, "one two"), (2, "a b c d")])
     got = {(r.doc_id, r.shingle) for r in _shingles(df).collect()}
     assert got == {(2, "a b c"), (2, "b c d")}
+
+
+@pytest.fixture(scope="module")
+def replayed_doc(tmp_path_factory):
+    """A fixture dir whose documents table is ONE doc replayed as two
+    identical rows, plus a DuckDB view over it. The doc's top bigram
+    ('a b', 2 of 9) sits just over the repetition gate."""
+    sf = tmp_path_factory.mktemp("replayed_doc")
+    row = "(1::BIGINT, 'a b a b c d e f g h', 'en', 'src1', 19::BIGINT)"
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM (VALUES {row}, {row})"
+        " v(doc_id, text, lang, source, n_chars))"
+        f" TO '{sf}/documents.parquet' (FORMAT parquet)"
+    )
+    con.execute(f"CREATE VIEW documents AS FROM '{sf}/documents.parquet'")
+    yield str(sf), con
+    con.close()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "curation_pipeline_v3",
+        "text_repetition_filter",
+        "text_perplexity_bigram",
+        "dedup_boilerplate_blocks",
+    ],
+)
+def test_replayed_doc_gate_stats_match_oracle(spark, replayed_doc, name):
+    """Each per-doc gate stat counts a replayed doc the way its Spark
+    helper does. v3's oracle once joined bigram counts back to the token
+    rows, so the replay doubled n_bigrams: n_pass_repetition read 2
+    against Spark's 0."""
+    sf, con = replayed_doc
+    df = registry.queries()[name](spark, sf)
+    assert_matches_oracle(df, con, registry.oracle_sql()[name])
 
 
 def test_identical_docs_identical_signatures(spark):
