@@ -55,7 +55,6 @@ _GRAMS_EXPR_TPL = (
     "array_distinct(transform(sequence(1, greatest(size(w) - {n} + 1, 1)), "
     "i -> concat_ws(' ', slice(w, i, {n}))))"
 )
-_GRAMS_EXPR = _GRAMS_EXPR_TPL.format(n=NGRAM)
 
 _GRAMS_SQL = f"""
     -- canonical document per id: a replayed doc_id carrying corrected

@@ -350,7 +350,7 @@ def ivf_topk(
 
     ``n_queries``/``nprobe`` default to the registered queries'
     constants (plans bit-identical); the ANN recall audit
-    (scripts/ann_recall_audit.py) widens the query set and sweeps
+    (``scripts/recall_audit.py ann``) widens the query set and sweeps
     nprobe through THIS path, so the audited generator is the
     production serving join verbatim.
 
@@ -359,6 +359,10 @@ def ivf_topk(
     SF Catalyst would happily broadcast the raw embeddings scan, which
     is fatal at real scale (the fact-broadcast audit caught exactly
     this)."""
+    from os___mapreduceframework_spark.operators.similarity import (
+        top_k_per_query,
+    )
+
     corpus = emb.join(assignments.hint("merge"), "vec_id")
 
     # each query probes its nprobe nearest centroids
@@ -374,19 +378,15 @@ def ivf_topk(
         .select("query_id", "qe", "cell")
     )
 
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
+    return top_k_per_query(
         corpus.join(F.broadcast(probes), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             "vec_id",
             F.round(_cosine(F.col("qe"), F.col("e")), 6).alias("cos_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= IVF_TOP_K)
-        .drop("rn")
-        .orderBy("query_id", F.col("cos_sim").desc(), "vec_id")
+        ),
+        IVF_TOP_K,
     )
 
 

@@ -24,12 +24,8 @@ from os___mapreduceframework_spark.operators.minhash import (
     _EMB_BANDS_SQL,
     _SQL_COS4,
     _cosine,
-    _cosine_prenorm,
     _cosine_sql,
-    _norm,
-    bucket_pairs,
     canonical_embeddings,
-    embedding_band_buckets,
     embedding_scored_pairs,
 )
 from os___mapreduceframework_spark.queries import query
@@ -44,6 +40,35 @@ TOP_K = 10
 N_PLANES = 8
 
 _SQL_COS = _cosine_sql("a.embedding::DOUBLE[]", "b.embedding::DOUBLE[]", 6)
+
+
+def top_k_per_query(scored: DataFrame, k: int = TOP_K) -> DataFrame:
+    """The ANN family's one top-k tail: keep each query's ``k`` best
+    ``(query_id, vec_id, cos_sim)`` rows (cos_sim desc, vec_id asc
+    tiebreak, the oracles' ROW_NUMBER order) and sort the result."""
+    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+        .orderBy("query_id", F.col("cos_sim").desc(), "vec_id")
+    )
+
+
+def _exact_topk(emb: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Exact cosine top-k of the query vectors (vec_id < N_QUERIES of
+    ``emb``) over ``corpus``: the small query set is broadcast against
+    the corpus, self-matches excluded."""
+    a = emb.filter(F.col("vec_id") < N_QUERIES).alias("a")
+    b = corpus.alias("b")
+    cos = F.round(_cosine(F.col("a.e"), F.col("b.e")), 6)
+    return top_k_per_query(
+        b.join(F.broadcast(a), F.col("b.vec_id") != F.col("a.vec_id")).select(
+            F.col("a.vec_id").alias("query_id"),
+            F.col("b.vec_id").alias("vec_id"),
+            cos.alias("cos_sim"),
+        )
+    )
 
 
 @query(
@@ -70,22 +95,7 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    queries_df = emb.filter(F.col("vec_id") < N_QUERIES)
-    a, b = queries_df.alias("a"), emb.alias("b")
-    cos = F.round(_cosine(F.col("a.e"), F.col("b.e")), 6)
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        b.join(F.broadcast(a), F.col("b.vec_id") != F.col("a.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("query_id"),
-            F.col("b.vec_id").alias("vec_id"),
-            cos.alias("cos_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-        .orderBy("query_id", F.col("cos_sim").desc(), "vec_id")
-    )
+    return _exact_topk(emb, emb)
 
 
 def lsh_buckets(emb: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
@@ -191,21 +201,15 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = with_buckets.filter(F.col("vec_id") < N_QUERIES).alias("a")
     b = with_buckets.alias("b")
     cos = F.round(_cosine(F.col("a.e"), F.col("b.e")), 6)
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
+    return top_k_per_query(
         b.join(
             F.broadcast(a),
             (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
+        ).select(
             F.col("a.vec_id").alias("query_id"),
             F.col("b.vec_id").alias("vec_id"),
             cos.alias("cos_sim"),
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-        .orderBy("query_id", F.col("cos_sim").desc(), "vec_id")
     )
 
 
@@ -275,18 +279,13 @@ def q_ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = emb.join(buckets, "vec_id")
     cos = F.round(_cosine(F.col("qe"), F.col("e")), 6)
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
+    return top_k_per_query(
         corpus.join(
             F.broadcast(probes),
             (F.col("bucket") == F.col("pb")) & (F.col("vec_id") != F.col("query_id")),
         )
         .select("query_id", "vec_id", cos.alias("cos_sim"))
         .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-        .orderBy("query_id", F.col("cos_sim").desc(), "vec_id")
     )
 
 
@@ -525,23 +524,7 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lang") == "en")
         .select(F.col("doc_id").alias("vec_id"))
     )
-    gated = emb.join(en_docs, "vec_id", "left_semi")
-    queries_df = emb.filter(F.col("vec_id") < N_QUERIES)
-    a, b = queries_df.alias("a"), gated.alias("b")
-    cos = F.round(_cosine(F.col("a.e"), F.col("b.e")), 6)
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return (
-        b.join(F.broadcast(a), F.col("b.vec_id") != F.col("a.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("query_id"),
-            F.col("b.vec_id").alias("vec_id"),
-            cos.alias("cos_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-        .orderBy("query_id", F.col("cos_sim").desc(), "vec_id")
-    )
+    return _exact_topk(emb, emb.join(en_docs, "vec_id", "left_semi"))
 
 
 @query(
@@ -1381,7 +1364,7 @@ def pq_adc_detail_topk(
     """PQ ADC serving (the registered query's whole body). ``k`` (codes
     per subspace codebook) and ``n_queries`` default to the registered
     constants, so q_ann_pq_adc_topk's plan is unchanged; the ANN recall
-    audit (scripts/ann_recall_audit.py) sweeps codebook size through
+    audit (``scripts/recall_audit.py ann``) sweeps codebook size through
     THIS path so the recall-vs-distortion curve measures the production
     dataflow verbatim.
 

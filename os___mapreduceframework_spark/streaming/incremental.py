@@ -519,6 +519,13 @@ def incremental_span_dedup(
     return spark.read.parquet(out_dir)
 
 
+def dir_bytes(d: str) -> int:
+    """Bytes on disk under ``d`` (0 when it does not exist)."""
+    return sum(
+        os.path.getsize(os.path.join(r, f)) for r, _, fs in os.walk(d) for f in fs
+    )
+
+
 def compact_span_registry(
     spark: SparkSession, state_dir: str, retain_batches: int | None = None
 ) -> dict:
@@ -559,17 +566,10 @@ def compact_span_registry(
             "bytes_after": 0,
         }
 
-    def _dir_bytes(d: str) -> int:
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(d)
-            for f in fs
-        )
-
     log = spark.read.parquet(registry_dir)
     if "b" not in log.columns:  # pre-stamp registry: treat as one batch
         log = log.withColumn("b", F.lit(0).cast("long"))
-    rows_before, bytes_before = log.count(), _dir_bytes(registry_dir)
+    rows_before, bytes_before = log.count(), dir_bytes(registry_dir)
     state = log.groupBy("h").agg(F.max("b").alias("b"))
     if retain_batches is not None:
         horizon = log.agg(F.max("b")).collect()[0][0] or 0
@@ -578,7 +578,7 @@ def compact_span_registry(
     state.write.parquet(tmp_dir)
     rows_after, bytes_after = (
         spark.read.parquet(tmp_dir).count(),
-        _dir_bytes(tmp_dir),
+        dir_bytes(tmp_dir),
     )
     _swap(registry_dir)
     return {

@@ -127,7 +127,7 @@ ROWS: dict[str, tuple[str, str, str]] = {
     "SCALE_r08.json": (
         "1M vectors (sf50emb), both families",
         "one-box envelope at 1M: calibration ceiling probe + strict "
-        "fill-in point (one `scripts/emb_scale_point.py` process per "
+        "fill-in point (one `scripts/scale_run.py point` process per "
         "point)",
         "both COMPLETE: 0.45 family 4289s/73.7 GB peak (the disk "
         "ceiling), 0.90 family 1448s/20 GB; 1.27 µs/candidate flat",
@@ -142,7 +142,7 @@ ROWS: dict[str, tuple[str, str, str]] = {
         "200k / 1M embeddings (quiet box, warm-min of 2)",
         "heavy embedding points re-measured after the r9 pair-scoring "
         "vectorization (numpy batch replaces the per-candidate JVM "
-        "fold; one `scripts/emb_scale_point.py` process per point)",
+        "fold; one `scripts/scale_run.py point` process per point)",
         "1M calibration 4289->530 s (8.1x; 0.157 µs/candidate, was "
         "1.27), 1M strict 1448->256 s; disk envelopes unchanged "
         "(73.5/17.3 GB) -- closes VERDICT r8 item 2's quiet re-run",
@@ -151,7 +151,7 @@ ROWS: dict[str, tuple[str, str, str]] = {
         "30x documents, 40 micro-batches in 4 sessions",
         "span-registry MAINTENANCE LOOP: retention compaction "
         "(retain 5) between sessions, churned replay traffic past the "
-        "horizon (written by `scripts/span_registry_steady_state.py "
+        "horizon (written by `scripts/scale_run.py spans-steady "
         "--out SCALE_r09_stream_spans_steady.json`)",
         "bounded sawtooth: steady-state peak ratio 1.001, "
         "post-compaction floor constant (~42 MB), re-admission "
@@ -169,7 +169,7 @@ ROWS: dict[str, tuple[str, str, str]] = {
         "heavy embedding points re-measured after the r10 carry-vector "
         "banding restructure (salt window, corpus join and bridge "
         "joins deleted; raw-bytes vector transport; one "
-        "`scripts/emb_scale_point.py` process per point)",
+        "`scripts/scale_run.py point` process per point)",
         "1M calibration 530->313 s (1.7x; 0.093 µs/candidate), 1M "
         "strict 256->125 s (2.05x); disk envelopes intact (72.0/20.0 "
         "GB); cumulative over both optimization rounds 4289->313 s "
@@ -178,7 +178,7 @@ ROWS: dict[str, tuple[str, str, str]] = {
     "REGISTRY_SCAN_sf1.json": (
         "sf1.0 (make_scale_fixture --factor 10)",
         "every registered query run once at sf1.0 (written by "
-        "`scripts/full_registry_scan.py <sf1.0 dir> REGISTRY_SCAN_sf1.json`)",
+        "`scripts/scale_run.py registry <sf1.0 dir> REGISTRY_SCAN_sf1.json`)",
         "240 ok / 0 errors in 764 s; slowest curation_pipeline_v3 21.8 s",
     ),
 }

@@ -10,7 +10,7 @@ value hash reduces to. A divergence is a real bug, never noise.
 
 Usage:
     python scripts/preflight_sweep.py [limit|names_csv] [sf_dir]
-        [--fixture clean|adversarial|empty|one|dup|conflict]
+        [--fixture clean|adversarial|empty|one|dup|conflict|ext_region]
         [--config harness|perturbed]
 
 ``limit`` checks only the first N queries (sweep-order prefix),

@@ -22,6 +22,18 @@ copies a base fixture dir with one such shape applied to every table
   payload-perturbed copy (a replayed batch carrying corrected values).
   Ties become REAL conflicts; any per-key winner pick must be
   deterministic and oracle-identical.
+- ext_region: the LSH EXTENSION region at fixture cost. The joint
+  bits+bands knob only engages past 131,072 distinct vectors, a scale no
+  driver fixture reaches, so clean sweeps never run the extension-band
+  SQL bridge (two-region plane decode, the nbands CASE,
+  extension-plane weights). EMPTY embedding lists count toward the
+  COUNT(*) that drives nbits/nbands but unnest to zero dim rows, so
+  they vanish from every plane sum identically on both engines:
+  ``embeddings`` becomes 300 real dim-16 vectors plus 131,073 empty
+  lists, which forces 13 bits / 50 bands (the first extension step)
+  while the signature, candidate and verify math runs on 300 vectors.
+  Check it with ``preflight_sweep.py dedup_embedding_near,
+  ann_knn_join_all,dedup_embedding_clusters --fixture ext_region``.
 """
 
 from __future__ import annotations
@@ -30,12 +42,34 @@ import tempfile
 
 import duckdb
 
+from os___mapreduceframework_spark.operators.minhash import (
+    emb_adaptive_bands,
+    emb_adaptive_bits,
+)
 from os___mapreduceframework_spark.sources import TABLES
 
 # the cardinality shapes; only these may refuse a bucket-anchored query
 # with the documented "timestamp bounds are undefined" error
 DEGENERATE = ("empty", "one", "dup", "conflict")
-KINDS = ("adversarial",) + DEGENERATE
+KINDS = ("adversarial",) + DEGENERATE + ("ext_region",)
+
+# ext_region embeddings: md5-derived components in [-1, 1)
+# (deterministic, engine-independent); every id = 1 mod 50 is a
+# near-twin of the id before it, so the verify stage has real matches.
+# Then 131,073 empty lists (the first count past the round-6 cap).
+_EXT_EMBEDDINGS = """
+  SELECT i AS vec_id,
+         list(CASE WHEN i % 50 = 1 THEN v * 0.97::DOUBLE + 0.01::DOUBLE
+                   ELSE v END ORDER BY d) AS embedding,
+         'ext' AS label
+  FROM (SELECT i, d,
+               (('0x' || md5((i - (i % 50 = 1)::BIGINT) || '_' || d)[1:8])
+                  ::BIGINT % 2000)::DOUBLE / 1000 - 1 AS v
+        FROM range(300) r(i), range(16) s(d))
+  GROUP BY i
+  UNION ALL
+  SELECT 1000000 + i, []::DOUBLE[], 'ext' FROM range(131073) r(i)
+"""
 
 # extra rows per table for the adversarial fixture, as UNION ALL arms
 # over the view ``src`` (the base table); ts stays non-null for
@@ -236,6 +270,8 @@ _CONFLICT_SELECT = {
 
 def _select(kind: str, table: str) -> str:
     """The query over view ``src`` that produces ``table`` for ``kind``."""
+    if kind == "ext_region":
+        return _EXT_EMBEDDINGS if table == "embeddings" else "SELECT * FROM src"
     if kind == "adversarial":
         edge = _EDGE_ROWS.get(table)
         return f"SELECT * FROM src UNION ALL {edge}" if edge else "SELECT * FROM src"
@@ -263,4 +299,13 @@ def build(kind: str, base_dir: str) -> str:
             con.execute(
                 f"COPY ({_select(kind, t)}) TO '{out}/{t}.parquet' (FORMAT parquet)"
             )
+        if kind == "ext_region":
+            (n,) = con.execute(
+                f"SELECT COUNT(DISTINCT vec_id) FROM '{out}/embeddings.parquet'"
+            ).fetchone()
+            if (emb_adaptive_bits(n), emb_adaptive_bands(n)) != (13, 50):
+                raise ValueError(
+                    f"ext_region: {n} vectors give {emb_adaptive_bits(n)} bits / "
+                    f"{emb_adaptive_bands(n)} bands, not the 13 / 50 extension step"
+                )
     return out

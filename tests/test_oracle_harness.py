@@ -99,3 +99,27 @@ def test_timestamp_refusal_passes_only_in_degenerate_cells(con, capsys):
     assert "OK-CONTRACT retention" in capsys.readouterr().out
     assert run_cell(None, con, "sf", qs, oracles, ["retention"]) == 1
     assert "ERROR retention" in capsys.readouterr().out
+
+
+def test_ext_region_fixture_reaches_the_extension_step():
+    """``--fixture ext_region``: 300 real vectors plus empty lists push
+    the distinct-vector count past the round-6 cap, so the banded
+    queries run at 13 bits / 50 bands while scoring only 300 vectors."""
+    import shutil
+
+    from os___mapreduceframework_spark.operators.minhash import (
+        emb_adaptive_bands,
+        emb_adaptive_bits,
+    )
+    from sweep_fixtures import build
+
+    out = build("ext_region", "/root/testdata/sf0.001")
+    try:
+        n, n_real = duckdb.sql(
+            f"SELECT COUNT(DISTINCT vec_id), COUNT(*) FILTER (len(embedding) > 0) "
+            f"FROM '{out}/embeddings.parquet'"
+        ).fetchone()
+    finally:
+        shutil.rmtree(out)
+    assert (n, n_real) == (131_373, 300)
+    assert (emb_adaptive_bits(n), emb_adaptive_bands(n)) == (13, 50)

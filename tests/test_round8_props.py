@@ -22,20 +22,23 @@ def test_scored_pairs_reject_min_cs_without_dedup(spark):
         embedding_scored_pairs(emb, dim=2, n_vectors=2, dedup=False, min_cs=0.3)
 
 
-def test_recall_audit_planting_hits_target_cosines(tmp_path):
-    """The strict recall audit's planted copies must land at their
-    float64 target cosines within float32 storage rounding — the audit
-    recomputes truth from the STORED vectors, so a systematic planting
-    error would silently shift the measured-vs-model comparison."""
+@pytest.mark.parametrize("base_choice", ["lsh", "ann"])
+def test_recall_audit_planting_hits_target_cosines(tmp_path, base_choice):
+    """The recall audits' planted copies must land at their float64
+    target cosines within float32 storage rounding — the audits
+    recompute truth from the STORED vectors, so a systematic planting
+    error would silently shift the measured-vs-model comparison. One
+    ``plant`` serves both audits; only the base choice differs (a seeded
+    sample for ``lsh``, the query ids for ``ann``)."""
     import numpy as np
     import pyarrow.parquet as pq
 
-    import scripts.lsh_recall_audit as aud
+    import scripts.recall_audit as aud
 
     src = "/root/testdata/sf0.1"
     out = str(tmp_path / "embeddings.parquet")
-    n_planted = aud.plant_near_dups(src, out)
-    assert n_planted >= 100
+    pick, seed = aud.PLANTING[base_choice]
+    pairs = aud.plant(src, out, pick, seed)
 
     t = pq.read_table(out)
     ids = np.asarray(t.column("vec_id").to_pandas(), dtype=np.int64)
@@ -46,14 +49,21 @@ def test_recall_audit_planting_hits_target_cosines(tmp_path):
     n_src = src_t.num_rows
     base, copies = X[:n_src], X[n_src:]
     # regenerate the same picks/targets from the pinned seed
-    rng = np.random.default_rng(aud.PLANT_SEED)
+    rng = np.random.default_rng(seed)
     norms = np.linalg.norm(base, axis=1)
-    eligible = np.nonzero(norms > 0)[0]
-    k = max(100, int(n_src * aud.PLANT_FRACTION))
-    pick = rng.choice(eligible, size=min(k, len(eligible)), replace=False)
-    targets = rng.uniform(aud.PLANT_LO, aud.PLANT_HI, size=len(pick))
+    if base_choice == "lsh":
+        eligible = np.nonzero(norms > 0)[0]
+        k = max(100, int(n_src * aud.PLANT_FRACTION))
+        pick_idx = rng.choice(eligible, size=min(k, len(eligible)), replace=False)
+        assert len(pick_idx) >= 100
+    else:
+        pick_idx = np.nonzero((ids[:n_src] < aud.NQ_AUDIT) & (norms > 0))[0]
+        assert len(pick_idx) > 0
+    targets = rng.uniform(aud.PLANT_LO, aud.PLANT_HI, size=len(pick_idx))
+    assert pairs[:, 0].tolist() == ids[pick_idx].tolist()
+    assert pairs[:, 1].tolist() == ids[n_src:].tolist()
 
-    b = base[pick]
+    b = base[pick_idx]
     cs = np.einsum("ij,ij->i", b, copies) / (
         np.linalg.norm(b, axis=1) * np.linalg.norm(copies, axis=1)
     )
