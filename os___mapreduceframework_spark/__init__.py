@@ -19,6 +19,15 @@ Everything relational runs through DataFrame/Catalyst; no shuffle, sort,
 or scheduling code is reimplemented (SURVEY.md section 7.0).
 """
 
-from os___mapreduceframework_spark.session import get_session
-
 __all__ = ["get_session"]
+
+
+def __getattr__(name: str):
+    # imported on first use, not with the package: Spark starts the worker
+    # daemon as ``-m os___mapreduceframework_spark.worker_daemon``, and the
+    # daemon must set its path before anything imports pyspark
+    if name == "get_session":
+        from os___mapreduceframework_spark.session import get_session
+
+        return get_session
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

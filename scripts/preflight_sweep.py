@@ -103,9 +103,12 @@ def run_cell(spark, con, sf, qs, oracles, names, refusal_ok=False) -> int:
     """Check each of ``names`` (``qs[name](spark, sf)`` vs
     ``oracles[name]`` on ``con``), print one line per query and a final
     ``DONE bad=N``, and return N. A query with no oracle only has to
-    run (ROWSONLY); the ``REFUSAL`` error passes only if ``refusal_ok``."""
+    run (ROWSONLY); the ``REFUSAL`` error passes only if ``refusal_ok``.
+    Each query's name goes to stderr before it starts, so the log of a
+    killed cell names the query that was running."""
     bad, t_start = 0, time.time()
     for i, name in enumerate(names, 1):
+        print(f"{i:3d} RUN {name}", file=sys.stderr, flush=True)
         t0 = time.time()
         try:
             df = qs[name](spark, sf)

@@ -69,6 +69,16 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def warm_up(spark, table: str) -> None:
+    """JVM, codegen and Python-worker warm-up, the way bench.py warms a
+    session: a one-row scan of the parquet file ``table`` and one
+    ``mapInPandas`` round trip over it, so the first timed run does not
+    pay the cold worker start."""
+    row = spark.read.parquet(table).limit(1)
+    materialize(row)
+    materialize(row.mapInPandas(lambda it: it, schema=row.schema))
+
+
 def timed(fn):
     """``(fn(), wall seconds)``."""
     t0 = time.perf_counter()
@@ -142,11 +152,7 @@ def cmd_queries(spark, args) -> int:
             return 2
     qs = registry.queries()
     base_dir = args.dirs[0]
-
-    # JVM/codegen/python-worker warmup, same as bench.py
-    region = spark.read.parquet(os.path.join(base_dir, "region.parquet"))
-    materialize(region)
-    materialize(region.mapInPandas(lambda it: it, schema=region.schema))
+    warm_up(spark, os.path.join(base_dir, "region.parquet"))
 
     samples: dict[str, dict[str, list[float]]] = {}
     for name in args.queries:
@@ -275,7 +281,8 @@ def cmd_point(spark, args) -> int:
     t.start()
 
     qs = registry.queries()
-    materialize(spark.read.parquet(os.path.join(args.dir, "embeddings.parquet")).limit(1))
+    # the point dir may hold only the tables its query reads
+    warm_up(spark, os.path.join(args.dir, "embeddings.parquet"))
     out = {"query": args.query, "dir": args.dir, "load_1m": round(os.getloadavg()[0], 2)}
     samples: list[float] = []
     try:

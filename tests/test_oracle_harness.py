@@ -92,6 +92,19 @@ def test_loop_reports_row_count_mismatch(con, capsys):
     assert "oracle_rows=2 first_diff=row-count" in capsys.readouterr().out
 
 
+def test_loop_names_each_query_on_stderr_before_it_runs(con, capsys):
+    seen = []
+
+    def killed(spark, sf):  # what a killed cell's log holds at this point
+        seen.append(capsys.readouterr().err)
+        raise RuntimeError("killed")
+
+    qs = {"good": frame(["a"], [(1,)]), "stuck": killed}
+    assert run_cell(None, con, "sf", qs, {}, list(qs)) == 1
+    assert seen == ["  1 RUN good\n  2 RUN stuck\n"]
+    assert "ERROR stuck: RuntimeError: killed" in capsys.readouterr().out
+
+
 def test_timestamp_refusal_passes_only_in_degenerate_cells(con, capsys):
     qs = {"retention": fails(f"events: {REFUSAL} (no non-NULL ts)")}
     oracles = {"retention": "SELECT 1 AS a"}

@@ -1,6 +1,7 @@
-"""Smoke test of the one scale runner (scripts/scale_run.py): the
+"""Smoke tests of the one scale runner (scripts/scale_run.py): the
 ``queries`` subcommand's record keeps the shape of the committed
-SCALE_r06.json, which SCALE_INDEX.md names as its artifact."""
+SCALE_r06.json, which SCALE_INDEX.md names as its artifact, and ``point``
+warms the session before its first timed run."""
 
 from __future__ import annotations
 
@@ -33,3 +34,14 @@ def test_queries_record_keeps_committed_shape(spark, tmp_path, capsys):
         assert len(entry["samples"]["sf0.01"]) == 1
         assert entry["ratio_vs_base"]["sf0.01"]["data_x"] == 10.0
     assert json.loads(capsys.readouterr().out.strip().splitlines()[-1])["out"] == out
+
+
+def test_point_warms_the_session_before_its_first_timed_run(monkeypatch, tmp_path, capsys):
+    calls = []
+    monkeypatch.setattr(scale_run, "warm_up", lambda spark, table: calls.append(("warm", table)))
+    monkeypatch.setattr(scale_run.registry, "queries", lambda: {"q": lambda spark, d: d})
+    monkeypatch.setattr(scale_run, "materialize", lambda df: calls.append(("run", df)))
+    d = str(tmp_path)
+    assert scale_run.cmd_point(None, scale_run.parse_args(["point", "q", d, "2"])) == 0
+    assert calls == [("warm", os.path.join(d, "embeddings.parquet")), ("run", d), ("run", d)]
+    assert len(json.loads(capsys.readouterr().out)["samples"]) == 2
